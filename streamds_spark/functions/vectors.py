@@ -71,12 +71,8 @@ def lsh_bucket_py(vec: list[float], planes: list[list[float]]) -> int:
     return bucket
 
 
-# DuckDB fragments with matching semantics (explicit double math, same
+# DuckDB fragment with matching semantics (explicit double math, same
 # left-to-right summation; round(..., 4) on both sides absorbs FP noise).
-def duckdb_dot(a: str, b: str) -> str:
-    return f"list_dot_product({a}::DOUBLE[], {b}::DOUBLE[])"
-
-
 def duckdb_cosine(a: str, b: str) -> str:
     return (
         f"(list_dot_product({a}::DOUBLE[], {b}::DOUBLE[]) / "

@@ -94,13 +94,6 @@ def read_parking(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.csv(path, schema=PARKING_SCHEMA, header=True, escape='"')
 
 
-def read_lines_keyed(spark: SparkSession, path: str) -> DataFrame:
-    """Generic keyed line source — the (filename:lineNo, line) tuple model."""
-    from streamds_spark.operators.rainstorm import read_source
-
-    return read_source(spark, path)
-
-
 def read_jsonl(
     spark: SparkSession,
     path: str,

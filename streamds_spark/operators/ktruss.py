@@ -105,8 +105,9 @@ def ktruss_edges(
     and completes FASTER (248.8 s) at 8 GiB + 256 partitions. Left unset
     it SELF-SIZES from the operator's own edge count (already materialized
     for the fixpoint test): max(session default, edges / 40k) — 1.2M
-    edges stays at the session's 32 (measured fine, 20.9 s), 12M edges
-    lands at ~300 (past the measured 256-partition completion point).
+    edges stays at a 32-slot session's 32 (measured fine, 20.9 s) and
+    lands at 30 on a 4-slot one, 12M edges lands at ~300 (past the
+    measured 256-partition completion point).
     The session default is restored on exit either way."""
     if k < 3:
         # k <= 2 makes sup_min <= 0 and the inner support join would WRONGLY

@@ -32,7 +32,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from streamds_spark.operators.iterate import lineage_cut, lineage_cut_eager
+from streamds_spark.operators.iterate import lineage_cut
 
 from streamds_spark.operators.concomp import connected_components
 from streamds_spark.operators.iterate import StatsPinnedCheckpointer

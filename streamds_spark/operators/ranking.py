@@ -91,7 +91,7 @@ def with_global_ranks(
         # nothing the in-bucket sort's own task split doesn't already.
         num_buckets = min(
             256,
-            int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")),
+            int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")),
         )
     probes = [i / num_buckets for i in range(1, num_buckets)]
     primaries = [order_cols[0] for order_cols, _ in rank_specs]

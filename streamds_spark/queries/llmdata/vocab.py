@@ -125,7 +125,7 @@ def source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spread=True (round 11): parallelizes the tokenize+explode map stage of a
     single-split scan. The (source, term) counts it feeds are integers and
-    their hash partitioning (fixed 32 shuffle partitions) is unchanged, so
+    their hash partitioning (the session's shuffle width) is unchanged, so
     the checkpointed count relation — and the vocabulary-sized KL sums read
     from it — are value-identical under any spread width (verified
     hash-exact at 3 SFs)."""

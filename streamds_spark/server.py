@@ -107,8 +107,10 @@ the deadline (`timeout_s` per request, else the server default), and
 `{"cmd": "cancel"}` cancels by tag from any other connection. Cancellation
 interrupts the running tasks (`interruptOnCancel`) and fails fast any
 not-yet-submitted job of the same request, so executor slots come back
-immediately and the CONNECTION SURVIVES — the tenant gets
-`{"ok": false, "error": "timeout ..."}` and can issue the next request.
+immediately (ad-hoc SQL with a nested-loop join scans row by row so
+its tasks see the interrupt, `_interruptible_sql`) and the CONNECTION
+SURVIVES — the tenant gets `{"ok": false, "error": "timeout ..."}` and can
+issue the next request.
 
 Scale discipline: the server NEVER collects an unbounded result — it
 collects `limit + 1` rows (default 100, hard cap 10_000) and reports
@@ -140,6 +142,58 @@ MAX_TIMEOUT_S = 3600.0
 # statement node names that mutate state but are NOT Command subclasses in
 # Catalyst's parsed tree (INSERT parses to a plain unary node)
 _MUTATING_NODES = frozenset({"InsertIntoStatement", "InsertIntoDir"})
+
+
+# physical joins that loop over a whole build side for every streamed row
+_NESTED_LOOP_JOINS = ("BroadcastNestedLoopJoin", "CartesianProduct")
+# (id(session), sf_dir) -> the session's row-scan clone (_interruptible_sql)
+_ROW_SCAN_SESSIONS: dict[tuple[int, str], Any] = {}
+_ROW_SCAN_LOCK = threading.Lock()
+
+
+def _row_scan_session(spark, sf_dir: str):
+    """A clone of `spark` (same conf as of the first call, same SparkContext,
+    so the same job group and pool) whose table views are re-registered with
+    the vectorized Parquet/ORC readers off. A scan reads the conf of the
+    session its view was loaded in, so setting the conf on the clone alone
+    would not reach the pinned views. Built once per session and sf_dir."""
+    from pyspark.sql import SparkSession
+
+    from streamds_spark.catalog import register_views
+
+    key = (id(spark), sf_dir)
+    with _ROW_SCAN_LOCK:
+        rows = _ROW_SCAN_SESSIONS.get(key)
+        if rows is None or rows.sparkContext is not spark.sparkContext:
+            rows = SparkSession(
+                spark.sparkContext, spark._jsparkSession.cloneSession()  # noqa: SLF001
+            )
+            rows.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
+            rows.conf.set("spark.sql.orc.enableVectorizedReader", "false")
+            register_views(rows, sf_dir)
+            _ROW_SCAN_SESSIONS[key] = rows
+    return rows
+
+
+def _interruptible_sql(spark, sf_dir: str, sql: str):
+    """DataFrame for an ad-hoc query whose running tasks die on cancel.
+
+    A task only notices `interruptOnCancel` where its input iterator checks
+    for a kill. A vectorized Parquet/ORC scan checks once per columnar batch
+    (4096 rows), and a nested-loop join does (batch rows x build rows) of
+    work per batch: a 3-way cross join of a 6000-row table runs ~10^11
+    iterations between checks, so a cancelled task keeps its executor slot
+    for hours. Plans with such a join therefore run on row-based scans
+    (`_row_scan_session`), which check for a kill on every row. Every other
+    query keeps the vectorized readers."""
+    df = spark.sql(sql)
+    qe = df._jdf.queryExecution()  # noqa: SLF001
+    if "Join" not in qe.analyzed().toString():
+        return df
+    plan = qe.sparkPlan().toString()
+    if not any(op in plan for op in _NESTED_LOOP_JOINS):
+        return df
+    return _row_scan_session(spark, sf_dir).sql(sql)
 
 
 def _json_cell(v: Any) -> Any:
@@ -262,7 +316,7 @@ def _run_request(
             return {"ok": False, "error": f"limit must be an int in [1, {MAX_LIMIT}]"}
         with scheduler_pool(spark, pool):
             df, cache_info = _maybe_cached(
-                spark.sql(sql), req, cache_dir, cache_max_bytes
+                _interruptible_sql(spark, default_sf_dir, sql), req, cache_dir, cache_max_bytes
             )
             rows = df.limit(limit + 1).collect()
         truncated = len(rows) > limit

@@ -6,8 +6,15 @@ Scale stance (100 TB / 1000 executors):
   - Arrow on: every Pandas-UDF path (minhash batching, multimodal decode) moves
     columnar batches, never per-row pickling.
   - Session timezone pinned to UTC so event-time semantics are deployment-independent.
-  - `spark.sql.shuffle.partitions` is only an AQE *upper* seed locally; on a real
-    cluster leave it high (e.g. 2000) and let AQE coalesce.
+  - `spark.sql.shuffle.partitions` defaults to the executor slot count, the N
+    of `local[N]` (`$SPARK_GRAFT_CPUS`): one task wave per shuffle stage.
+    Batch stages are AQE-coalesced below it, and the graph operators read it
+    as the floor of their data-sized widths. Stateful streaming operators are
+    exempt from AQE: their first batch freezes the width into the checkpoint
+    as the state-partition count, and a restart at another width keeps the
+    checkpoint's. Every state partition is one task, one state-store commit
+    and one sink part per micro-batch, so a width past the slot count only
+    adds waves. On a real cluster pass `shuffle_partitions` (e.g. 2000).
 """
 
 from __future__ import annotations
@@ -76,14 +83,15 @@ def get_spark(
 ) -> SparkSession:
     """Return (or create) the session. Idempotent: re-uses an active session
     (in which case allocation_file cannot be applied — scheduler pools are
-    fixed at SparkContext init)."""
+    fixed at SparkContext init). `shuffle_partitions` defaults to the slot
+    count (module docstring)."""
     active = SparkSession.getActiveSession()
     if active is not None:
         return active
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{DEFAULT_CPUS}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or int(DEFAULT_CPUS)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

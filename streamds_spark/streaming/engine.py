@@ -16,7 +16,10 @@ outputMode("complete"|"update") on groupBy().count() — SURVEY.md §7.4 item 4.
 
 Scale: state lives in the executor state stores partitioned by the group key —
 the hash-shuffle the reference hand-rolled (ST4) is the exchange in front of the
-stateful agg. Late data / event-time (absent in the reference) is available via
+stateful agg. Its partition count is the session's shuffle width (the slot
+count, session.py) at the first batch, frozen in the checkpoint: AQE never
+coalesces it, and a restart at another width keeps the checkpoint's. Late
+data / event-time (absent in the reference) is available via
 windowed_counts(watermark=...).
 """
 

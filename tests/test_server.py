@@ -358,6 +358,41 @@ def test_cancel_verb_kills_tagged_request(spark):
         server.server_close()
 
 
+def test_cancel_frees_executor_slots_of_nested_loop_sql(spark):
+    """A cancelled cross join must stop its TASKS, not only its job: with
+    vectorized scans the nested-loop task checks for a kill once per 4096-row
+    batch and kept running (and holding its slot) long after the cancel."""
+    import time
+
+    def running_tasks() -> int:
+        execs = spark.sparkContext._jsc.sc().statusStore().executorList(True)
+        return sum(execs.apply(i).activeTasks() for i in range(execs.size()))
+
+    server, host, port = _start(spark)
+    results: dict[str, dict] = {}
+    try:
+        t = threading.Thread(
+            target=lambda: results.update(
+                slow=request(host, port, {"sql": SLOW_SQL, "tag": "loop"}, timeout=300)
+            )
+        )
+        t.start()
+        deadline = time.time() + 60
+        while running_tasks() == 0 and time.time() < deadline:
+            time.sleep(0.2)
+        assert running_tasks() > 0, "the cross join never started a task"
+        assert request(host, port, {"cmd": "cancel", "tag": "loop"})["cancelled"]
+        t.join(timeout=60)
+        assert results["slow"].get("cancelled") is True, results
+        deadline = time.time() + 30
+        while running_tasks() > 0 and time.time() < deadline:
+            time.sleep(0.2)
+        assert running_tasks() == 0, "cancelled tasks still hold executor slots"
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
 @pytest.mark.slow
 def test_pipeline_status_over_socket(spark, tmp_path):
     """The server can watch the RUNNING ingest pipeline (reference leader's

@@ -37,6 +37,15 @@ def _write_chunks(d: str, n_chunks: int = 6, lines_per_chunk: int = 50) -> Count
     return golden
 
 
+def _copy_chunks(src: str, dst: str, chunks: range) -> None:
+    """Make chunks of src arrive in dst (the input a stream tails)."""
+    os.makedirs(dst, exist_ok=True)
+    for c in chunks:
+        name = f"chunk_{c:03d}.txt"
+        with open(os.path.join(src, name)) as fin, open(os.path.join(dst, name), "w") as fout:
+            fout.write(fin.read())
+
+
 def test_streaming_wordcount_complete_mode(spark, tmp_path):
     src = str(tmp_path / "in")
     golden = _write_chunks(src)
@@ -64,11 +73,7 @@ def test_streaming_restart_recovers_state(spark, tmp_path):
     half = str(tmp_path / "in_half")
     golden = _write_chunks(src, n_chunks=6)
     # phase 1: only half the chunks exist; stream drains and stops
-    os.makedirs(half)
-    for c in range(3):
-        name = f"chunk_{c:03d}.txt"
-        with open(os.path.join(src, name)) as fin, open(os.path.join(half, name), "w") as fout:
-            fout.write(fin.read())
+    _copy_chunks(src, half, range(3))
     job = RainStormJob("split_operator", "", "count_operator", "", half)
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
@@ -77,12 +82,44 @@ def test_streaming_restart_recovers_state(spark, tmp_path):
     partial = {r["word"]: r["count"] for r in read_latest_batch(spark, out).collect()}
     assert sum(partial.values()) == 3 * 50 * 2
     # phase 2: the rest arrives; restart from the SAME checkpoint
-    for c in range(3, 6):
-        name = f"chunk_{c:03d}.txt"
-        with open(os.path.join(src, name)) as fin, open(os.path.join(half, name), "w") as fout:
-            fout.write(fin.read())
+    _copy_chunks(src, half, range(3, 6))
     q2 = run_rainstorm_stream(spark, job, ckpt, out, available_now=True, max_files_per_trigger=1)
     q2.awaitTermination(120)
+    final = {r["word"]: r["count"] for r in read_latest_batch(spark, out).collect()}
+    assert final == dict(golden)
+
+
+def test_restart_at_other_shuffle_width_keeps_state_partitions(spark, tmp_path):
+    """The session's shuffle width follows the executor slot count, so a
+    checkpoint written on one box (or before the width changed) can be
+    resumed by a session of another width. The stateful count's partition
+    count is frozen in the checkpoint: the restart must keep the first
+    run's state partitions and still reach the golden counts."""
+    src = str(tmp_path / "in")
+    half = str(tmp_path / "in_half")
+    golden = _write_chunks(src, n_chunks=6)
+    _copy_chunks(src, half, range(3))
+    job = RainStormJob("split_operator", "", "count_operator", "", half)
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+
+    def drain(width: int) -> int:
+        spark.conf.set(key, str(width))
+        q = run_rainstorm_stream(spark, job, ckpt, out, available_now=True)
+        assert q.awaitTermination(120)
+        assert q.exception() is None
+        return q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+
+    try:
+        assert drain(3) == 3
+        partial = {r["word"]: r["count"] for r in read_latest_batch(spark, out).collect()}
+        assert sum(partial.values()) == 3 * 50 * 2
+        _copy_chunks(src, half, range(3, 6))
+        assert drain(5) == 3
+    finally:
+        spark.conf.set(key, saved)
     final = {r["word"]: r["count"] for r in read_latest_batch(spark, out).collect()}
     assert final == dict(golden)
 

@@ -111,7 +111,6 @@ def test_determinism_ordering_and_empty(spark):
     assert stress_centrality_topk(empty, k=5).count() == 0
 
 
-@pytest.mark.slow
 def test_eccentricity_exactly_max_iter_accepted(spark):
     """Exhaustion is confirmed by one empty expansion: an eccentricity of
     exactly max_iter must be accepted (extra probe iteration), one beyond

@@ -1,12 +1,12 @@
-"""Round-11 optimization measurement harness.
+"""Optimization measurement harness, labelled by round.
 
 For each named registry query (default: the bench HEADLINE set):
-  * dump .explain("formatted") to plans/r11/<name>_<tag>.txt
+  * dump .explain("formatted") to plans/<round>/<name>_<tag>.txt
   * time count() min-of-N (the bench methodology) and the noop sink
     min-of-N (guide §1.4 — materializes every column, so plan-shape
     changes can't hide behind count()'s column pruning).
 
-Usage: python tools/r11_measure.py [--tag before|after] [--sf-dir D] [names...]
+Usage: python tools/measure.py --round r12 [--tag before|after] [--sf-dir D] [names...]
 """
 
 from __future__ import annotations
@@ -43,6 +43,7 @@ HEADLINE = [
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("--round", required=True, help="round label, e.g. r12")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--runs", type=int, default=3)
@@ -52,8 +53,8 @@ def main() -> None:
 
     names = args.names or HEADLINE
     specs = load_all()
-    spark = get_spark("r11-measure")
-    plans_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r11")
+    spark = get_spark(f"{args.round}-measure")
+    plans_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", args.round)
     os.makedirs(plans_dir, exist_ok=True)
 
     # warm-up (bench parity)
@@ -73,12 +74,12 @@ def main() -> None:
                 f.write(buf.getvalue())
         counts, noops = [], []
         for _ in range(args.runs):
-            spark.sparkContext.setJobDescription(f"r11[{args.tag}] {name} count")
+            spark.sparkContext.setJobDescription(f"{args.round}[{args.tag}] {name} count")
             t0 = time.time()
             spec.fn(spark, args.sf_dir).count()
             counts.append(time.time() - t0)
         for _ in range(args.runs):
-            spark.sparkContext.setJobDescription(f"r11[{args.tag}] {name} noop")
+            spark.sparkContext.setJobDescription(f"{args.round}[{args.tag}] {name} noop")
             t0 = time.time()
             spec.fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
             noops.append(time.time() - t0)
