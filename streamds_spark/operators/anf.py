@@ -46,10 +46,12 @@ fold collapses them to nodes x m cells (see the packed-layout block below).
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from streamds_spark.operators.iterate import lineage_cut
+from streamds_spark.operators.iterate import fixpoint, lineage_cut, undirected
 
 M_ANF = 64
 HEX = "0123456789abcdef"
@@ -324,7 +326,7 @@ def anf_counters(
     node v's registers sketch its whole connected component. Exposed for
     the invariant tests; the census below is the registry surface."""
     counters, _ = _anf_iterate(edges, max_iter, stripes)
-    return counters
+    return _packed_to_narrow(counters)
 
 
 def anf_census(
@@ -394,24 +396,11 @@ def harmonic_centrality_topk(
     exactly like the HLL register stores stand in for distinct counts.
     Ties break (h_scaled DESC, node ASC) so the top-k is deterministic.
 
-    Scale shape: identical to anf_census — per round one adjacency
-    equi-join collapsing map-side plus TWO node-sized folds (per-node mass,
-    harmonic accumulate), rounds bounded by the diameter, and the same
-    self-sizing `stripes` memory dial divides the propagation fan-out."""
-    adj = (
-        edges.select("u", "v")
-        .unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .transform(lineage_cut)
-    )
-    spark = edges.sparkSession
-    # one count answers both the empty check and the stripes sizing —
-    # BEFORE any seeding/checkpoint jobs are spent on an empty graph
-    # (and it materializes the LAZY adjacency checkpoint in the same job)
-    n_adj = adj.count()
-    if n_adj == 0:
-        return spark.createDataFrame([], "node bigint, h_scaled bigint")
-    if stripes is None:
-        stripes = _auto_stripes(n_adj, _mem_budget_bytes(spark))
+    Scale shape: anf_census's round loop (_anf_iterate) — per round one
+    adjacency equi-join collapsing map-side plus TWO node-sized folds
+    (per-node mass, harmonic accumulate), rounds bounded by the diameter,
+    and the same self-sizing `stripes` memory dial divides the propagation
+    fan-out."""
 
     def per_node_mass(c: DataFrame) -> DataFrame:
         # packed rows are one-row-per-node, so the per-node mass is a
@@ -420,31 +409,22 @@ def harmonic_centrality_topk(
         # here and again every round — guide §2.4)
         return c.select("node", F.expr(_PACKED_RHO).alias("mass"))
 
-    counters = _seed_packed(adj)
-    node_mass = per_node_mass(counters)
-    h = node_mass.select(
-        "node", F.lit(0).cast("bigint").alias("h_scaled")
-    ).transform(lineage_cut)
-    # the ONE driver job of the seeding step — it materializes the lazy
-    # seed checkpoint as a side effect (guide §1.3)
-    total_prev = node_mass.agg(F.sum("mass")).collect()[0][0]
-    changed = counters  # round 1: every seeded register is fresh
-    for t in range(1, max_iter + 1):
-        nxt, changed = _propagate_packed(adj, counters, stripes, changed, n_adj)
-        new_mass = per_node_mass(nxt)
-        # the ONE driver job per round: the saturation probe materializes
-        # the round's lazy propagate checkpoint (new_mass is a row-local
-        # projection of it, so later reads re-project, never re-propagate)
-        total = new_mass.agg(F.sum("mass")).collect()[0][0]
-        if total == total_prev:  # rho mass strictly grows on ANY change
-            return h.orderBy(F.desc("h_scaled"), "node").limit(k)
-        w = HARMONIC_SCALE // t
-        delta = new_mass.join(
-            node_mass.withColumnRenamed("mass", "pmass"), "node"
+    def zero(c: DataFrame) -> DataFrame:
+        return c.select(
+            "node", F.lit(0).cast("bigint").alias("h_scaled")
+        ).transform(lineage_cut)
+
+    acc: list[DataFrame] = []  # the running h table
+
+    def accumulate(t: int, prev: DataFrame, nxt: DataFrame) -> None:
+        h = acc.pop() if acc else zero(prev)
+        delta = per_node_mass(nxt).join(
+            per_node_mass(prev).withColumnRenamed("mass", "pmass"), "node"
         ).select(
-            "node", ((F.col("mass") - F.col("pmass")) * w).alias("dh")
+            "node",
+            ((F.col("mass") - F.col("pmass")) * (HARMONIC_SCALE // t)).alias("dh"),
         )
-        h = (
+        acc.append(
             h.join(delta, "node", "left")
             .select(
                 "node",
@@ -454,53 +434,64 @@ def harmonic_centrality_topk(
             )
             .transform(lineage_cut)
         )
-        counters, node_mass, total_prev = nxt, new_mass, total
-    raise RuntimeError(
-        f"harmonic centrality did not saturate in {max_iter} rounds"
-    )
+
+    counters, _ = _anf_iterate(edges, max_iter, stripes, on_round=accumulate)
+    h = acc[0] if acc else zero(counters)
+    return h.orderBy(F.desc("h_scaled"), "node").limit(k)
 
 
 def _anf_iterate(
-    edges: DataFrame, max_iter: int, stripes: "int | None" = None
+    edges: DataFrame,
+    max_iter: int,
+    stripes: "int | None" = None,
+    on_round: "Callable[[int, DataFrame, DataFrame], None] | None" = None,
 ) -> tuple[DataFrame, list[tuple[int, int, int]]]:
-    adj = (
-        edges.select("u", "v")
-        .unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .transform(lineage_cut)
-    )
+    """(fixpoint packed counters, census) — the HyperANF round loop shared
+    by the census and harmonic centrality. `on_round(t, prev, nxt)` sees
+    every round that grew the counters (the saturating round excluded)."""
+    adj = undirected(edges.select("u", "v"), distinct=False).transform(lineage_cut)
     # One cheap count sizes BOTH dials (the stripes memory dial and the
     # propagate stage width) and materializes the lazy checkpoint.
     n_adj = adj.count()
+    counters = _seed_packed(adj)
+    if n_adj == 0:
+        # an empty graph has no registers: a (0, 0) census
+        return counters, [(0, 0, 0)]
     if stripes is None:
         stripes = _auto_stripes(n_adj, _mem_budget_bytes(edges.sparkSession))
-    counters = _seed_packed(adj)
 
     def mass(c: DataFrame) -> tuple[int, int]:
-        # coalesce: SUM over zero rows is NULL — an empty edge list must
-        # yield a (0, 0) census, not a TypeError on int(None). Row-local
-        # register/rho tallies over the packed rows, then one sum —
-        # identical values to the retired narrow layout's
+        # Row-local register/rho tallies over the packed rows, then one
+        # sum — identical values to the retired narrow layout's
         # count(*) / sum(max_rho).
         src = c.select(
             F.expr(_PACKED_REG).alias("_reg"),
             F.expr(_PACKED_RHO).alias("_rho"),
         )
         row = src.agg(
-            F.coalesce(F.sum("_reg"), F.lit(0)).cast("bigint").alias("reg"),
-            F.coalesce(F.sum("_rho"), F.lit(0)).cast("bigint").alias("rho"),
+            F.sum("_reg").cast("bigint").alias("reg"),
+            F.sum("_rho").cast("bigint").alias("rho"),
         ).collect()[0]
         return int(row["reg"]), int(row["rho"])
 
-    reg, rho = mass(counters)
-    census = [(0, reg, rho)]
-    changed = counters  # round 1: every seeded register is fresh
-    for t in range(1, max_iter + 1):
+    # the ONE driver job of the seeding step — it materializes the lazy
+    # seed checkpoint as a side effect (guide §1.3)
+    census = [(0, *mass(counters))]
+
+    def step(carry, pin):
+        counters, changed = carry
         nxt, changed = _propagate_packed(adj, counters, stripes, changed, n_adj)
+        # the ONE driver job per round: the saturation probe materializes
+        # the round's lazy propagate checkpoint
         reg, rho = mass(nxt)
         if rho == census[-1][2]:  # rho mass strictly grows on ANY change
-            return _packed_to_narrow(counters), census
-        counters = nxt
+            return counters, True
+        t = len(census)
+        if on_round is not None:
+            on_round(t, counters, nxt)
         census.append((t, reg, rho))
-    raise RuntimeError(
-        f"ANF register propagation did not saturate in {max_iter} rounds"
-    )
+        return (nxt, changed), False
+
+    # round 1: every seeded register is fresh
+    run = fixpoint(step, (counters, counters), max_iter, "ANF register propagation")
+    return run.value, census

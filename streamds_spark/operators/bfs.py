@@ -27,39 +27,62 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from streamds_spark.operators.iterate import lineage_cut, lineage_cut_eager
+from streamds_spark.operators.iterate import (
+    fixpoint,
+    lineage_cut,
+    lineage_cut_eager,
+    undirected,
+)
+
+
+def _bfs_wave(
+    adj: DataFrame, frontier: DataFrame, key: list[str], max_iter: int, what: str
+) -> DataFrame:
+    """DataFrame[*key, node, dist] — the BFS wave from `frontier(*key,
+    node)` (the dist-0 rows) over the half-edge table `adj(u, v)`, one
+    independent wave per key value (no key: one wave from the whole
+    frontier). Each round expands the frontier one hop and anti-joins the
+    visited (key, node) pairs; the eager frontier checkpoint is the round's
+    driver job, and `isEmpty` on it is the stop test."""
+    cols = [*key, "node"]
+    dist = frontier.withColumn("dist", F.lit(0).cast("bigint"))
+
+    def step(carry, pin):
+        frontier, dist, d = carry
+        nxt = (
+            frontier.join(adj, frontier.node == adj.u)
+            .select(*key, F.col("v").alias("node"))
+            .distinct()
+            .join(dist.select(*cols), cols, "left_anti")
+            .transform(lineage_cut_eager)
+        )
+        if nxt.isEmpty():
+            return dist, True
+        # LAZY union checkpoint: the visited table is consumed inside the
+        # NEXT hop's eager frontier job (or the caller's terminal action), so
+        # the copy folds into that job — one driver job per hop, not two
+        # (guide §1.3)
+        dist = dist.unionByName(
+            nxt.withColumn("dist", F.lit(d).cast("bigint"))
+        ).transform(lineage_cut)
+        return (nxt, dist, d + 1), False
+
+    return fixpoint(step, (frontier, dist, 1), max_iter, what).value
 
 
 def hop_distances(
     edges: DataFrame, sources: DataFrame, max_iter: int = 50
 ) -> DataFrame:
     """DataFrame[node, dist: bigint] — minimum hop count from any node in
-    `sources(node)` over `edges(u, v)`. Unreached nodes are absent."""
-    adj = edges.select("u", "v").unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    `sources(node)` over `edges(u, v)`. Unreached nodes are absent. The
+    keyed wave with no key: all sources expand as one wave. (A constant
+    key column would cost round 1 two extra exchanges: the frontier's
+    node partitioning would no longer serve the visited-set anti-join.)"""
+    adj = undirected(edges.select("u", "v"), distinct=False).transform(
+        lineage_cut_eager
     )
-    adj = adj.transform(lineage_cut_eager)
     frontier = sources.select("node").distinct().transform(lineage_cut_eager)
-    dist = frontier.withColumn("dist", F.lit(0).cast("bigint"))
-    for d in range(1, max_iter + 1):
-        nxt = (
-            adj.join(frontier, adj.u == frontier.node)
-            .select(F.col("v").alias("node"))
-            .distinct()
-            .join(dist.select("node"), "node", "left_anti")
-            .transform(lineage_cut_eager)
-        )
-        if nxt.isEmpty():
-            return dist
-        # LAZY union checkpoint: the visited table is consumed inside the
-        # NEXT hop's eager frontier job (or the caller's terminal action), so
-        # the copy folds into that job — one driver job per hop, not two
-        # (guide §1.3; the eager nxt checkpoint stays: isEmpty() is the exit)
-        dist = dist.unionByName(
-            nxt.withColumn("dist", F.lit(d).cast("bigint"))
-        ).transform(lineage_cut)
-        frontier = nxt
-    raise RuntimeError(f"BFS did not exhaust the reachable set in {max_iter} hops")
+    return _bfs_wave(adj, frontier, [], max_iter, "BFS hops")
 
 
 def weighted_distances(
@@ -84,38 +107,24 @@ def weighted_distances(
     (the only relation that moves; it tracks the relaxation wave, not the
     graph), a groupBy-min over candidate updates, and one carry-forward
     left join against the n-row distance table. Nothing broadcasts by hint
-    (AQE may broadcast a genuinely small frontier at runtime); lineage is
-    truncated per round, with `improved` STATS-PINNED: `improved` and
-    `dist` each descend with the other through outer joins, so Catalyst's
-    product-of-children size estimates would otherwise double their BigInt
-    bit length per round and stall the driver in BigInteger.multiply on
-    relaxation chains past ~20 rounds. Pinning `improved` to exact
-    (small-constant) stats breaks the product chain — `dist`'s snapshot
-    then grows a constant number of bits per round (linear), so its own
-    truncation is a plain lazy checkpoint whose copy folds into the next
-    round's pin job: one driver job per round (see operators/iterate.py;
-    hop_distances above is join-against-fixed + union only, which grows
-    linearly and needs no pin at all)."""
-    from streamds_spark.operators.iterate import StatsPinnedCheckpointer
-    adj = edges.select(
-        "u", "v", F.col("w").cast("bigint").alias("w")
-    ).unionAll(
-        edges.select(
-            F.col("v").alias("u"),
-            F.col("u").alias("v"),
-            F.col("w").cast("bigint").alias("w"),
-        )
-    )
-    adj = adj.transform(lineage_cut_eager)
+    (AQE may broadcast a genuinely small frontier at runtime). `improved`
+    and `dist` each descend from the other through outer joins, so
+    `improved` is stats-pinned (operators/iterate.py); that keeps `dist`'s
+    growth linear, so its own truncation is a plain lazy checkpoint whose
+    copy folds into the next round's pin job: one driver job per round."""
+    adj = undirected(
+        edges.select("u", "v", F.col("w").cast("bigint").alias("w")),
+        distinct=False,
+    ).transform(lineage_cut_eager)
     dist = (
         sources.select("node")
         .distinct()
         .withColumn("dist", F.lit(0).cast("bigint"))
         .transform(lineage_cut_eager)
     )
-    frontier = dist
-    pin = StatsPinnedCheckpointer(lag=4)
-    for _ in range(max_iter):
+
+    def step(carry, pin):
+        frontier, dist = carry
         cand = (
             adj.join(frontier, adj.u == frontier.node)
             .select(F.col("v").alias("node"), (F.col("dist") + F.col("w")).alias("nd"))
@@ -130,13 +139,7 @@ def weighted_distances(
         # the pin's own materialization count answers the fixpoint test —
         # no separate isEmpty job (guide §1.3)
         if pin.last_count == 0:
-            pin.release()
-            return dist
-        # dist needs only a LAZY unpinned truncation: with `improved` pinned
-        # to exact (small-constant) stats each round, the carry's snapshot
-        # grows a constant number of bits per round — linear, not the
-        # doubling case (iterate.py) that needs the pin on BOTH relations.
-        # The copy folds into the next round's pin job: one job per round.
+            return dist, True
         dist = (
             dist.join(
                 improved.withColumnRenamed("dist", "nd"), "node", "left"
@@ -150,11 +153,9 @@ def weighted_distances(
             )
             .transform(lineage_cut)
         )
-        frontier = improved
-    pin.release()
-    raise RuntimeError(
-        f"weighted relaxation did not reach the fixpoint in {max_iter} rounds"
-    )
+        return (improved, dist), False
+
+    return fixpoint(step, (dist, dist), max_iter, "weighted relaxation", lag=4).value
 
 
 def keyed_distances(
@@ -168,11 +169,8 @@ def keyed_distances(
     audit-scale graphs, not the 100 TB path (hop_distances /
     operators/anf.py are the single-source-set and sketched answers there).
     Unreached (src, node) pairs are absent; dist=0 rows are the sources."""
-    adj = (
-        edges.select("u", "v")
-        .unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .transform(lineage_cut_eager)
+    adj = undirected(edges.select("u", "v"), distinct=True).transform(
+        lineage_cut_eager
     )
     spark = edges.sparkSession
     if sources is None:
@@ -184,23 +182,4 @@ def keyed_distances(
     ).transform(lineage_cut_eager)
     if frontier.isEmpty():
         return spark.createDataFrame([], "src bigint, node bigint, dist bigint")
-    dist = frontier.withColumn("dist", F.lit(0).cast("bigint"))
-    for d in range(1, max_iter + 1):
-        nxt = (
-            frontier.join(adj, frontier.node == adj.u)
-            .select("src", F.col("v").alias("node"))
-            .distinct()
-            .join(dist.select("src", "node"), ["src", "node"], "left_anti")
-            .transform(lineage_cut_eager)
-        )
-        if nxt.isEmpty():
-            return dist
-        # LAZY union checkpoint — same one-job-per-hop economics as
-        # hop_distances above
-        dist = dist.unionByName(
-            nxt.withColumn("dist", F.lit(d).cast("bigint"))
-        ).transform(lineage_cut)
-        frontier = nxt
-    raise RuntimeError(
-        f"keyed BFS did not exhaust the reachable set in {max_iter} hops"
-    )
+    return _bfs_wave(adj, frontier, ["src"], max_iter, "keyed BFS hops")

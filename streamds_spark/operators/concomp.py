@@ -23,10 +23,8 @@ its join key; label-sized probes ride it), one groupBy-min (partial
 aggregation collapses the fan-in map-side), and one label⋈label pointer
 jump. Nothing broadcasts by hint. The pointer jump joins two relations
 that BOTH descend from the previous round's carry, so each round's
-truncation is a STATS-PINNED checkpoint (persist + count + localCheckpoint,
-operators/iterate.py) — Catalyst's product-of-children size estimate would
-otherwise double its BigInt bit length every round through the checkpoint
-snapshot and stall the driver in BigInteger.multiply.
+truncation is stats-pinned (operators/iterate.py explains the pin; the
+loop runs on its fixpoint driver).
 
 The reference (StreamDS, Go) has no graph surface; this extends the
 engine's iterative family (SURVEY.md §2 'beyond-reference' operators).
@@ -37,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from streamds_spark.operators.iterate import lineage_cut, lineage_cut_eager
+from streamds_spark.operators.iterate import fixpoint, lineage_cut_eager, undirected
 
 
 def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
@@ -50,20 +48,17 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     than raises on non-convergence: chains deeper than 2^max_iter rounds of
     halving may keep multiple labels per component.
     """
-    from streamds_spark.operators.iterate import StatsPinnedCheckpointer
+    from pyspark.sql.types import NumericType
 
-    pairs = edges.select("u", "v")
-    bidir = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).transform(lineage_cut_eager)
+    bidir = undirected(edges.select("u", "v"), distinct=False).transform(
+        lineage_cut_eager
+    )
     labels = (
         bidir.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
         .transform(lineage_cut_eager)
     )
-    from pyspark.sql.types import NumericType
-
     # Convergence detection: labels only ever DECREASE (min/least), so the
     # label vector changed iff some label strictly decreased. For numeric
     # node ids the decimal SUM is a monotone 1-row proxy (equal sum ⟺
@@ -71,10 +66,9 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     # have no sum — fall back to an exact changed-row check (one node-sized
     # join per round; CC rounds are O(log diameter), so the cost is bounded).
     numeric_ids = isinstance(labels.schema["component"].dataType, NumericType)
-    prev_sum = None
-    pin = StatsPinnedCheckpointer(lag=2)
-    for _ in range(max_iter):
-        prev_labels = labels
+    sums = [None]  # the previous round's label sum
+
+    def step(labels, pin):
         neighbor_min = (
             bidir.join(labels, bidir.v == labels.node)
             .groupBy(F.col("u").alias("n2"))
@@ -98,32 +92,27 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         if numeric_ids:
             # the label-sum convergence probe rides the pin's own
             # materialization scan — one driver job per round, not two
-            labels = pin.checkpoint(
+            nxt = pin.checkpoint(
                 jumped,
                 extra_aggs=[F.sum(F.col("component").cast("decimal(38,0)"))],
             )
-            cur_sum = pin.last_aggs[0]
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
+            unchanged = pin.last_aggs[0] == sums[-1]
+            sums.append(pin.last_aggs[0])
         else:
-            labels = pin.checkpoint(jumped)
-            changed = (
-                labels.toDF("node", "newc")
-                .join(prev_labels.toDF("node", "oldc"), "node")
+            nxt = pin.checkpoint(jumped)
+            unchanged = (
+                nxt.toDF("node", "newc")
+                .join(labels.toDF("node", "oldc"), "node")
                 .filter(F.col("newc") != F.col("oldc"))
+                .isEmpty()
             )
-            if changed.isEmpty():
-                break
-    else:
-        import warnings
+        # unchanged labels: the entering table is the fixpoint
+        return (labels, True) if unchanged else (nxt, False)
 
-        warnings.warn(
-            f"connected_components did not converge within {max_iter} "
-            "iterations; chains deeper than 2^max_iter may keep multiple labels"
-        )
-    pin.release()
-    return labels
+    # exhausted: chains deeper than 2^max_iter may keep multiple labels
+    return fixpoint(
+        step, labels, max_iter, "connected_components", exhausted="warn"
+    ).value
 
 
 def component_census(edges: DataFrame) -> DataFrame:

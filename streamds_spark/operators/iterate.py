@@ -42,14 +42,25 @@ expansion, and PageRank are all linear. Use the pin wherever a round joins
 two relations that BOTH descend from the previous round's carry
 (H-index carry-forward, weighted Bellman-Ford relaxation, pointer-jumping
 connected components).
+
+``fixpoint`` is the one round driver of the iterative graph operators: it
+owns the pin's lifetime, the round count, the ``max_iter`` exhaustion rule
+and a per-round trace; each loop supplies only its step and stop test.
 """
 
 from __future__ import annotations
 
+import logging
 import os
+import time
+import warnings
+from typing import Any, Callable, NamedTuple
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 
 def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -103,8 +114,19 @@ class StatsPinnedCheckpointer:
     def __init__(self, lag: int = 2):
         self._lag = max(0, lag)
         self._cached: list[DataFrame] = []
-        self.last_count: int = 0
+        self._outputs: list[DataFrame] = []  # returned since the last new_round()
+        self.last_count: "int | None" = None
         self.last_aggs: "tuple | None" = None
+
+    def new_round(self) -> None:
+        self._outputs = []
+        self.last_count = None
+
+    def count(self, df: DataFrame) -> int:
+        """``df.count()``, kept as ``last_count`` like a pin's own count —
+        for a round whose stop test counts a relation it does not pin."""
+        self.last_count = df.count()
+        return self.last_count
 
     def checkpoint(self, df: DataFrame, extra_aggs: "list | None" = None) -> DataFrame:
         """Pin ``df``. ``extra_aggs`` (pyspark Columns) ride the SAME
@@ -114,8 +136,6 @@ class StatsPinnedCheckpointer:
         results land in ``last_aggs`` in order. The scan is a full pass over
         the persisted relation either way, so the pinned stats are identical.
         """
-        from pyspark.sql import functions as F
-
         df.persist(StorageLevel.MEMORY_AND_DISK)
         # materialize so the snapshot reads EXACT cached stats
         if extra_aggs:
@@ -126,6 +146,7 @@ class StatsPinnedCheckpointer:
             self.last_count = df.count()
             self.last_aggs = None
         out = lineage_cut(df, eager=False)
+        self._outputs.append(out)
         self._cached.append(df)
         while len(self._cached) > self._lag:
             self._cached.pop(0).unpersist()
@@ -140,6 +161,87 @@ class StatsPinnedCheckpointer:
 
     def __exit__(self, *exc) -> None:
         self.release()
+
+
+class Round(NamedTuple):
+    """One traced round: ``rows`` is the pin's ``last_count`` (None when the
+    round neither pinned nor counted), so tracing runs no Spark job of its
+    own."""
+
+    round: int
+    rows: "int | None"
+    wall_ms: float
+
+
+class Fixpoint(NamedTuple):
+    """A loop's result and its per-round trace."""
+
+    value: Any
+    trace: list[Round]
+
+    @property
+    def rounds(self) -> int:
+        return len(self.trace)
+
+
+def fixpoint(
+    step: Callable[[Any, StatsPinnedCheckpointer], "tuple[Any, bool]"],
+    carry: Any,
+    max_iter: int,
+    what: str,
+    *,
+    lag: int = 2,
+    exhausted: str = "raise",
+) -> Fixpoint:
+    """Run ``carry, done = step(carry, pin)`` for at most ``max_iter``
+    rounds. Once ``done``, the carry is the loop's result; a stop test that
+    means "nothing changed" returns the carry that ENTERED the round, which
+    the round's own job has already read (and so materialized).
+
+    The driver owns what every loop used to copy: one
+    ``StatsPinnedCheckpointer(lag)`` for the step's pins, released in
+    ``finally``; the round count; exhaustion — ``exhausted="raise"`` raises
+    RuntimeError, ``"warn"`` warns and returns the last carry; and the
+    materialize-before-release rule: a result that is a pin output of the
+    final round has not been copied yet (the copy is lazy), so it is counted
+    once before its cache is released — otherwise the caller's first action
+    would recompute the round. Returns ``Fixpoint(value, trace)``.
+    """
+    if exhausted not in ("raise", "warn"):
+        raise ValueError(f"exhausted must be 'raise' or 'warn', got {exhausted!r}")
+    pin = StatsPinnedCheckpointer(lag)
+    trace: list[Round] = []
+    try:
+        for rnd in range(1, max_iter + 1):
+            pin.new_round()
+            t0 = time.perf_counter()
+            carry, done = step(carry, pin)
+            trace.append(Round(rnd, pin.last_count, (time.perf_counter() - t0) * 1000))
+            log.debug("%s round %d: rows=%s %.0f ms", what, *trace[-1])
+            if done:
+                break
+        else:
+            msg = f"{what} did not converge in {max_iter} rounds"
+            if exhausted == "raise":
+                raise RuntimeError(msg)
+            warnings.warn(msg + "; returning the last round's result", stacklevel=3)
+        if any(carry is out for out in pin._outputs):
+            carry.count()
+        return Fixpoint(carry, trace)
+    finally:
+        pin.release()
+
+
+def undirected(edges: DataFrame, *, distinct: bool) -> DataFrame:
+    """Both half-edges of every edge: ``edges(u, v, ...)`` plus its swap
+    ``(v, u, ...)``, other columns carried along; ``distinct`` drops
+    duplicate half-edges (needed where the input may hold both orientations
+    or repeats)."""
+    rest = [c for c in edges.columns if c not in ("u", "v")]
+    both = edges.select("u", "v", *rest).unionAll(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"), *rest)
+    )
+    return both.distinct() if distinct else both
 
 
 def leaf_stats_bits(df: DataFrame) -> int:

@@ -14,9 +14,10 @@ is a multi-GB OOM at cluster scale. The anti-join hint is therefore
 size-gated: we already run one job per round to count the peel set (the
 fixpoint test), so the same count decides broadcast (tiny peel set) vs a
 plain shuffled anti-join where AQE is free to re-plan at runtime. Lineage
-is truncated with localCheckpoint every round — without it the plan doubles
-per iteration and the driver OOMs on plan size long before data size
-matters. Rounds are bounded by the graph's degeneracy ordering depth,
+is truncated every round — without it the plan doubles per iteration and
+the driver OOMs on plan size long before data size matters. Both loops run
+on operators/iterate.fixpoint; why and where a round pins is explained in
+that module. Rounds are bounded by the graph's degeneracy ordering depth,
 ~O(log n) on heavy-tailed graphs; `max_iter` caps pathological chains and
 raising it is safe because each round strictly shrinks the node set.
 """
@@ -26,7 +27,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from streamds_spark.operators.iterate import lineage_cut, lineage_cut_eager
+from streamds_spark.operators.iterate import (
+    Round,
+    fixpoint,
+    lineage_cut,
+    lineage_cut_eager,
+    undirected,
+)
 
 # Broadcast the peel set only below this row count. At ~16 bytes per id row
 # this stays well under the default 10 MB autoBroadcastJoinThreshold and far
@@ -58,36 +65,31 @@ def kcore_nodes(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     round strictly shrinks the graph, so this only triggers on a peel chain
     deeper than max_iter — rerun with a higher cap).
     """
-    from streamds_spark.operators.iterate import StatsPinnedCheckpointer
-
-    # Symmetrize once: adjacency with one row per directed half-edge.
-    adj = edges.select("u", "v").unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    adj = undirected(edges.select("u", "v"), distinct=False).transform(
+        lineage_cut_eager
     )
-    adj = adj.transform(lineage_cut_eager)
-    # Each truncation is persist+count+lazy-checkpoint (the pin helper): the
+
+    # Each truncation is a pin (persist + count + lazy checkpoint): the
     # materialization count doubles as the loop test, so a round runs TWO
     # driver jobs (low, peeled adj) instead of four (checkpoint + count,
     # checkpoint + isEmpty) — guide §1.3. (The peel's anti-join stats grow
     # linearly, so the pin here is job economics, not the stats repair.)
-    pin = StatsPinnedCheckpointer(lag=4)  # 2 pins/round, keep 2 rounds
-    try:
-        for _ in range(max_iter):
-            deg = adj.groupBy("u").agg(F.count("*").alias("degree"))
-            low = pin.checkpoint(
-                deg.filter(F.col("degree") < k).select(F.col("u").alias("n"))
-            )
-            n_low = pin.last_count
-            if n_low == 0:
-                return deg.select(F.col("u").alias("node"), "degree")
-            adj = pin.checkpoint(_peel_once(adj, low, n_low))
-            if pin.last_count == 0:
-                return deg.filter(F.lit(False)).select(
-                    F.col("u").alias("node"), "degree"
-                )
-    finally:
-        pin.release()
-    raise RuntimeError(f"k-core peeling did not converge in {max_iter} rounds")
+    def step(adj, pin):
+        deg = adj.groupBy("u").agg(F.count("*").alias("degree"))
+        nodes = deg.select(F.col("u").alias("node"), "degree")
+        low = pin.checkpoint(
+            deg.filter(F.col("degree") < k).select(F.col("u").alias("n"))
+        )
+        n_low = pin.last_count
+        if n_low == 0:
+            return nodes, True
+        adj = pin.checkpoint(_peel_once(adj, low, n_low))
+        if pin.last_count == 0:
+            return nodes.filter(F.lit(False)), True
+        return adj, False
+
+    # 2 pins/round, keep 2 rounds
+    return fixpoint(step, adj, max_iter, "k-core peeling", lag=4).value
 
 
 def kcore_summary(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
@@ -159,34 +161,23 @@ from streamds_spark.operators.sizing import (  # noqa: E402
 )
 
 
-
 def _core_numbers_with_rounds(
-    edges: DataFrame, max_iter: int = 100, stats: "dict | None" = None
-) -> tuple[DataFrame, int]:
-    """(core numbers, rounds used) — the rounds count backs the convergence
-    bound test; callers wanting only the result use core_numbers. When a
-    dict is passed as `stats`, it receives per-round instrumentation:
-    `changed` (nodes whose estimate moved) and `mode` ('full'/'active') —
-    the active-set shrink pin in tests/test_kcore.py reads it.
+    edges: DataFrame, max_iter: int = 100
+) -> tuple[DataFrame, list[Round]]:
+    """(core numbers, per-round trace) — the trace's
+    `rows` is each round's changed-node count, which backs the convergence
+    and active-set tests; callers wanting only the result use core_numbers.
 
-    The active branch's moved-set truncation is STATS-PINNED (persist +
-    count before localCheckpoint): the moved-set join and the carry-forward
-    join both descend from the previous round's estimate table, and
-    Catalyst's product-of-children size estimates compound through
-    checkpoint snapshots — the estimate's BigInt bit length would double
-    per round and the driver end up spending minutes in BigInteger.multiply
-    by round ~25 (see operators/iterate.py for the full mechanism). Pinning
-    the moved set to exact (small-constant) stats breaks the product chain,
-    so the carry-forward checkpoint itself is a plain LAZY truncation whose
-    snapshot grows only a constant number of bits per round. The dense
-    branch's checkpoint sits above an aggregate, whose size estimate is
-    linear in its child, so it needs no pin either."""
-    from streamds_spark.operators.iterate import StatsPinnedCheckpointer
-
-    adj = edges.select("u", "v").unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    Each round counts the moved set, and the count is the fixpoint test.
+    An active round pins the moved set: it and the carry-forward join both
+    descend from the previous estimate table, the compounding-stats case of
+    operators/iterate.py, and the pin keeps the carry's own truncation a
+    plain lazy checkpoint. A full round's new estimates sit above an
+    aggregate, whose size estimate is linear in its child, so it needs no
+    pin."""
+    adj = undirected(edges.select("u", "v"), distinct=False).transform(
+        lineage_cut_eager
     )
-    adj = adj.transform(lineage_cut_eager)
     est = (
         adj.groupBy("u")
         .agg(F.count("*").cast("bigint").alias("e"))
@@ -194,12 +185,6 @@ def _core_numbers_with_rounds(
         .transform(lineage_cut_eager)
     )
     n_nodes = est.count()
-    if stats is not None:
-        stats["changed"] = []
-        stats["mode"] = []
-    changed = est.select("node")  # round 1: every estimate is fresh
-    n_changed = n_nodes
-    pin = StatsPinnedCheckpointer(lag=2)  # 1 pin/batch, keep 2 batches
 
     def h_update(sub: DataFrame, cur: DataFrame) -> DataFrame:
         # H-index per node via the sorted-prefix identity (round 12):
@@ -227,15 +212,6 @@ def _core_numbers_with_rounds(
             )
         )
 
-    def finish(result: DataFrame, rounds_used: int):
-        # ADVICE r11: materialize the returned checkpoint BEFORE releasing
-        # the pin caches, so the caller's first action reads checkpointed
-        # blocks instead of silently recomputing the final carry join
-        result = result.select("node", F.col("e").alias("core"))
-        result.count()
-        pin.release()
-        return result, rounds_used
-
     # Adjacency LISTS for the active branch (round 12, guide §1.2/§2.4):
     # the r11 active rounds derived the frontier neighborhood with TWO
     # left-semi joins against the FLAT 2-column adjacency — two full
@@ -253,16 +229,14 @@ def _core_numbers_with_rounds(
     adj_lists = (
         adj.groupBy("u").agg(F.collect_list("v").alias("vs"))
     ).transform(lineage_cut)
-    rounds = 0
-    while rounds < max_iter:
-        full = n_changed > n_nodes * ACTIVE_SET_FRACTION
-        rounds += 1
-        if full:
-            upd = h_update(adj, est)
+
+    def step(carry, pin):
+        est, changed, n_changed = carry
+        if n_changed > n_nodes * ACTIVE_SET_FRACTION:
             # lazy checkpoints + ONE count: the count job materializes
             # moved AND (through its lineage) the new_est checkpoint —
-            # 3 jobs/round collapsed into 1 (guide §1.3, latency-bound tail)
-            new_est = upd.transform(lineage_cut)
+            # 3 jobs/round collapsed into 1 (guide §1.3)
+            new_est = h_update(adj, est).transform(lineage_cut)
             moved = (
                 new_est.alias("n")
                 .join(est.alias("o"), "node")
@@ -270,9 +244,7 @@ def _core_numbers_with_rounds(
                 .select("node")
                 .transform(lineage_cut)
             )
-            n_changed = moved.count()
-            est = new_est
-            changed = moved
+            pin.count(moved)
         else:
             # frontier neighborhood off the LIST relation: u's with an edge
             # into a changed node (= neighbors of the frontier), then ALL of
@@ -288,37 +260,35 @@ def _core_numbers_with_rounds(
             sub = adj_lists.join(active, "u", "left_semi").select(
                 "u", F.explode("vs").alias("v")
             )
-            upd = h_update(sub, est)
             # recomputed nodes that actually moved; everyone else carries
             # forward untouched (estimates only ever decrease, so <> is <)
             moved_vals = pin.checkpoint(
-                upd.alias("n")
+                h_update(sub, est).alias("n")
                 .join(est.alias("o"), "node")
                 .where("n.e <> o.e")
                 .select("node", F.col("n.e").alias("e_new"))
             )
-            # the pin's materialization count IS the moved count — no
-            # second count job per round
-            n_changed = pin.last_count
-            # with moved_vals pinned to exact (small-constant) stats, the
-            # carry's checkpoint snapshot grows a constant number of bits per
-            # round (linear — not the doubling case that needs BOTH pins), so
-            # a plain LAZY truncation suffices and its copy folds into the
-            # next round's pin job: one driver job per active round, not two
-            est = (
+            # the carry's truncation folds into the next round's pin job:
+            # one driver job per active round
+            new_est = (
                 est.join(moved_vals, "node", "left")
                 .select(
                     "node", F.coalesce("e_new", "e").cast("bigint").alias("e")
                 )
                 .transform(lineage_cut)
             )
-            changed = moved_vals.select("node")
-        if stats is not None:
-            stats["changed"].append(n_changed)
-            stats["mode"].append("full" if full else "active")
-        if n_changed == 0:  # no estimate moved: fixpoint reached
-            return finish(est, rounds)
-    pin.release()
-    raise RuntimeError(
-        f"core-number H-index iteration did not converge in {max_iter} rounds"
+            moved = moved_vals.select("node")
+        # last_count IS the moved count; none moved: the entering
+        # estimates are the fixpoint
+        if pin.last_count == 0:
+            return est, True
+        return (new_est, moved, pin.last_count), False
+
+    # round 1 recomputes everything: every estimate is fresh
+    run = fixpoint(
+        step,
+        (est, est.select("node"), n_nodes),
+        max_iter,
+        "core-number H-index iteration",
     )
+    return run.value.select("node", F.col("e").alias("core")), run.trace

@@ -20,9 +20,8 @@ for the wedge join + the closing join) over a strictly shrinking edge set
 because later rounds run on the survivors. The carry-forward edge set
 enters the wedge join THREE times (cur^3), the worst compounding shape
 for Catalyst's product-of-children size snapshots, so the per-round
-truncation is stats-pinned (operators/iterate.py — without the pin the
-size estimate's bit length triples per round and the driver stalls in
-BigInteger.multiply on deep cascades).
+truncation is stats-pinned (operators/iterate.py explains the pin; the
+loop runs on its fixpoint driver).
 """
 
 from __future__ import annotations
@@ -30,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from streamds_spark.operators.iterate import StatsPinnedCheckpointer
+from streamds_spark.operators.iterate import fixpoint
 
 
 def _support(edges: DataFrame, width: "int | None" = None) -> DataFrame:
@@ -134,22 +133,23 @@ def ktruss_edges(
             spark.conf.set(
                 "spark.sql.shuffle.partitions", str(int(shuffle_partitions))
             )
-        pin = StatsPinnedCheckpointer(lag=2)
-        for rounds in range(1, max_iter + 1):
-            sup = _support(cur, width=int(shuffle_partitions))
+        width = int(shuffle_partitions)
+
+        def step(carry, pin):
+            cur, n_cur = carry
             keep = pin.checkpoint(
-                cur.join(sup, ["u", "v"]).where(F.col("s") >= sup_min)
+                cur.join(_support(cur, width=width), ["u", "v"]).where(
+                    F.col("s") >= sup_min
+                )
             )
-            n_new = keep.count()
-            if n_new in (n_cur, 0):
-                pin.release()
-                return keep, rounds
-            cur = keep.select("u", "v")
-            n_cur = n_new
-        pin.release()
-        raise RuntimeError(
-            f"k-truss peeling did not converge in {max_iter} rounds"
-        )
+            # the pin's count is the fixpoint test: nothing peeled, or
+            # nothing left
+            if pin.last_count in (n_cur, 0):
+                return keep, True
+            return (keep.select("u", "v"), pin.last_count), False
+
+        run = fixpoint(step, (cur, n_cur), max_iter, "k-truss peeling")
+        return run.value, run.rounds
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
 

@@ -45,15 +45,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from streamds_spark.operators.iterate import lineage_cut, lineage_cut_eager
+from streamds_spark.operators.iterate import lineage_cut, lineage_cut_eager, undirected
 
 
 def _sym_adj(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select("u", "v")
-        .unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .transform(lineage_cut_eager)
+    return undirected(edges.select("u", "v"), distinct=True).transform(
+        lineage_cut_eager
     )
 
 

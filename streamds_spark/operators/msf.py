@@ -22,20 +22,17 @@ That uniqueness is what makes the operator oracle-verifiable exactly.
 The component-relabel join references the previous round's carry on both
 branches (the contraction mapping derives from the same edges it
 relabels) — the compounding-stats shape — so each round's carry is
-stats-pinned (operators/iterate.py).
+stats-pinned (operators/iterate.py explains the pin; the loop runs on its
+fixpoint driver).
 """
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from streamds_spark.operators.iterate import lineage_cut
-
 from streamds_spark.operators.concomp import connected_components
-from streamds_spark.operators.iterate import StatsPinnedCheckpointer
+from streamds_spark.operators.iterate import fixpoint, lineage_cut
 
 
 def minimum_spanning_forest(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
@@ -85,63 +82,59 @@ def minimum_spanning_forest(edges: DataFrame, max_rounds: int = 30) -> DataFrame
             "(w, u, v) lexicographically into a distinct key first"
         )
     picked_rounds: list[DataFrame] = []
-    pin = StatsPinnedCheckpointer(lag=2)
+
+    def step(cedges, pin):
+        # per-component cheapest incident crossing edge (cut property:
+        # every one of these is an MSF member). Adjacency = both edge
+        # directions; min_by is safe because w is a distinct total order.
+        adj = cedges.select(F.col("cu").alias("c"), "w", "ou", "ov").unionByName(
+            cedges.select(F.col("cv").alias("c"), "w", "ou", "ov")
+        )
+        picked = (
+            adj.groupBy("c")
+            .agg(F.min_by(F.struct("w", "ou", "ov"), "w").alias("e"))
+            .select("e.w", "e.ou", "e.ov")
+            .distinct()  # both endpoints' components may pick the edge
+            # LAZY: materializes inside the contraction's first job
+            .transform(lineage_cut)
+        )
+        picked_rounds.append(picked)
+        # contract: components of the picked-edge graph OVER COMPONENT
+        # LABELS (component-count-sized input, one edge per component).
+        # w is a distinct total order, so it alone identifies the edge.
+        pick_labels = cedges.join(
+            picked.select("w"), "w", "left_semi"
+        ).select(F.col("cu").alias("u"), F.col("cv").alias("v"))
+        mapping = connected_components(pick_labels).toDF("node", "newc")
+        # relabel both endpoints; labels with no picked edge keep theirs
+        cedges = pin.checkpoint(
+            cedges.join(mapping.toDF("cu", "nu"), "cu", "left")
+            .join(mapping.toDF("cv", "nv"), "cv", "left")
+            .select(
+                F.coalesce("nu", "cu").alias("cu"),
+                F.coalesce("nv", "cv").alias("cv"),
+                "w",
+                "ou",
+                "ov",
+            )
+            .filter(F.col("cu") != F.col("cv"))
+        )
+        # the pin's count is the crossing-edge count: none left, done
+        if pin.last_count == 0:
+            return None, True
+        return cedges, False
+
     # the contract aggregate above already counted the crossing edges, and
-    # each round's pin recounts them — the loop reads those counts instead
-    # of running a per-round isEmpty job (guide §1.3)
-    n_cross = int(wc["rows"])
-    try:
-        for _ in range(max_rounds):
-            if n_cross == 0:
-                break
-            # per-component cheapest incident crossing edge (cut property:
-            # every one of these is an MSF member). Adjacency = both edge
-            # directions; min_by is safe because w is a distinct total order.
-            adj = cedges.select(F.col("cu").alias("c"), "w", "ou", "ov").unionByName(
-                cedges.select(F.col("cv").alias("c"), "w", "ou", "ov")
-            )
-            picked = (
-                adj.groupBy("c")
-                .agg(F.min_by(F.struct("w", "ou", "ov"), "w").alias("e"))
-                .select("e.w", "e.ou", "e.ov")
-                .distinct()  # both endpoints' components may pick the edge
-                # LAZY: materializes inside the contraction's first job
-                .transform(lineage_cut)
-            )
-            picked_rounds.append(picked)
-            # contract: components of the picked-edge graph OVER COMPONENT
-            # LABELS (component-count-sized input, one edge per component).
-            # w is a distinct total order, so it alone identifies the edge.
-            pick_labels = cedges.join(
-                picked.select("w"), "w", "left_semi"
-            ).select(F.col("cu").alias("u"), F.col("cv").alias("v"))
-            mapping = connected_components(pick_labels).toDF("node", "newc")
-            # relabel both endpoints; labels with no picked edge keep theirs
-            cedges = (
-                cedges.join(
-                    mapping.toDF("cu", "nu"), "cu", "left"
-                )
-                .join(mapping.toDF("cv", "nv"), "cv", "left")
-                .select(
-                    F.coalesce("nu", "cu").alias("cu"),
-                    F.coalesce("nv", "cv").alias("cv"),
-                    "w",
-                    "ou",
-                    "ov",
-                )
-                .filter(F.col("cu") != F.col("cv"))
-            )
-            cedges = pin.checkpoint(cedges)
-            n_cross = pin.last_count
-        else:
-            if n_cross != 0:
-                warnings.warn(
-                    f"minimum_spanning_forest: {max_rounds} rounds did not "
-                    "exhaust crossing edges; returning the partial forest",
-                    stacklevel=2,
-                )
-    finally:
-        pin.release()
+    # each round's pin recounts them — no per-round isEmpty job (guide §1.3)
+    if wc["rows"]:
+        # exhausted: the partial forest is returned
+        fixpoint(
+            step,
+            cedges,
+            max_rounds,
+            "minimum_spanning_forest",
+            exhausted="warn",
+        )
     spark = edges.sparkSession
     if not picked_rounds:
         return spark.createDataFrame([], edges.select("u", "v", "w").schema)

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from streamds_spark.operators.iterate import lineage_cut, lineage_cut_eager
+from streamds_spark.operators.iterate import lineage_cut, lineage_cut_eager, undirected
 
 STRESS_PIVOTS = 4
 
@@ -69,11 +69,8 @@ def stress_per_source(
     source — the exact all-sources decomposition (state nodes x reachable,
     audit-scale graphs only); the top-k fold over any pivot PREFIX of the
     same sweep equals stress_centrality_topk at that pivot count."""
-    adj = (
-        edges.select("u", "v")
-        .unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .transform(lineage_cut_eager)
+    adj = undirected(edges.select("u", "v"), distinct=True).transform(
+        lineage_cut_eager
     )
     spark = edges.sparkSession
     if adj.isEmpty():

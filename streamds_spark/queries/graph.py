@@ -1092,6 +1092,7 @@ def copurchase_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (u, v) repartition directly, trading the (measured ~30%-effective)
     map-side partial aggregation for spill-free width.
     """
+    from streamds_spark.operators.iterate import undirected
     from streamds_spark.operators.sizing import (
         LINKPRED_MAX_PARTITIONS,
         LINKPRED_WEDGES_PER_TASK,
@@ -1099,9 +1100,9 @@ def copurchase_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     edges = copurchase_edges(li).localCheckpoint(eager=False)
-    adj = edges.unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).select(F.col("u").alias("a"), F.col("v").alias("b"))
+    adj = undirected(edges, distinct=False).select(
+        F.col("u").alias("a"), F.col("v").alias("b")
+    )
     deg = (
         adj.groupBy("a")
         .agg(F.count("*").alias("d"))
@@ -1843,6 +1844,7 @@ def stress_estimator_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact top-20 — all BIGINTs, hash-exact against the DuckDB replay.
     The production query ships pivots=4; this row is the evidence table
     behind that dial (Brandes & Pich 2007 estimation posture)."""
+    from streamds_spark.operators.iterate import undirected
     from streamds_spark.operators.stress import _pivots, stress_per_source
 
     edges = _audit_edges(spark, sf_dir)
@@ -1859,9 +1861,7 @@ def stress_estimator_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
 
     exact = topk(per)
-    adj = edges.unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).distinct()
+    adj = undirected(edges, distinct=True)
     piv = [r["src"] for r in _pivots(adj, max(AUDIT_PIVOT_COUNTS)).collect()]
     n_nodes = adj.select("u").distinct().count()
     n_edges = edges.count()

@@ -23,12 +23,15 @@ import contextlib
 import os
 import shutil
 import tempfile
+import threading
+import weakref
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-_SHIPPED_SESSIONS: set[int] = set()
+_SHIPPED_CONTEXTS: "weakref.WeakSet" = weakref.WeakSet()  # of SparkContexts
+_SHIP_LOCK = threading.Lock()
 
 
 def ensure_workers_can_import(spark: SparkSession) -> None:
@@ -37,19 +40,22 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     The driver may import this package from a sys.path entry the forked Python
     workers don't inherit (they only get PYTHONPATH/cwd); any cloudpickled
     closure referencing module-level symbols (mapInPandas decode, pandas_udf
-    wrappers) would then fail to unpickle worker-side. One zip per session fixes
-    that for local and cluster mode alike.
+    wrappers) would then fail to unpickle worker-side. One zip per
+    SparkContext fixes that for local and cluster mode alike: sessions made
+    by newSession() or cloneSession() share their context's workers, so they
+    ship nothing again.
     """
-    key = id(spark)
-    if key in _SHIPPED_SESSIONS:
-        return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_base = os.path.join(tempfile.gettempdir(), f"streamds_spark_pkg_{os.getpid()}")
-    zip_path = zip_base + ".zip"
-    if not os.path.exists(zip_path):
-        shutil.make_archive(zip_base, "zip", os.path.dirname(pkg_dir), "streamds_spark")
-    spark.sparkContext.addPyFile(zip_path)
-    _SHIPPED_SESSIONS.add(key)
+    sc = spark.sparkContext
+    with _SHIP_LOCK:
+        if sc in _SHIPPED_CONTEXTS:
+            return
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        zip_base = os.path.join(tempfile.gettempdir(), f"streamds_spark_pkg_{os.getpid()}")
+        zip_path = zip_base + ".zip"
+        if not os.path.exists(zip_path):
+            shutil.make_archive(zip_base, "zip", os.path.dirname(pkg_dir), "streamds_spark")
+        sc.addPyFile(zip_path)
+        _SHIPPED_CONTEXTS.add(sc)
 
 
 def write_allocation_file(path: str, pools: dict[str, tuple[int, int]]) -> str:
@@ -104,10 +110,10 @@ def get_spark(
         # ON/OFF probe on the formerly-pathological family now reads
         # on/off within [0.95, 1.06] (lsh_pairs 1.134 vs 1.086 s,
         # recall_audit 4.93 vs 5.21, setsim 3.38 vs 3.19, link_prediction
-        # 13.5 vs 13.3 - tools/r12_cprop_probe.py). Matching vanilla keeps
-        # inferred IsNotNull/transitive predicates dropping null join keys
-        # at the scan on every deployment; the env dial remains for a
-        # cluster that measures otherwise.
+        # 13.5 vs 13.3 - `git show 86a9d50:tools/r12_cprop_probe.py`).
+        # Matching vanilla keeps inferred IsNotNull/transitive predicates
+        # dropping null join keys at the scan on every deployment; the env
+        # dial remains for a cluster that measures otherwise.
         .config(
             "spark.sql.constraintPropagation.enabled",
             os.environ.get("SPARK_GRAFT_CONSTRAINT_PROP", "true"),
@@ -116,6 +122,9 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # reliable lineage cuts (SPARK_GRAFT_CHECKPOINT_DIR) are deleted
+        # once their RDD is garbage-collected, so the directory stays bounded
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # FAIR root scheduling: one engine session serves CONCURRENT queries
         # (the reference serves concurrent grep/RainStorm sessions from its
         # 10 nodes, core_process.go:455-478). In FAIR mode Spark creates a

@@ -77,3 +77,104 @@ def test_release_unpersists_everything(spark):
     assert pin._cached == []
     # the checkpointed result stays readable after release
     assert out.count() == 10
+
+
+# ---------------------------------------------------------------------------
+# fixpoint: the round driver of the iterative graph operators
+# ---------------------------------------------------------------------------
+
+
+def test_fixpoint_traces_pin_counts_and_releases(spark):
+    from streamds_spark.operators.iterate import fixpoint
+
+    pins = []
+
+    def step(df, pin):  # pin a shrinking range, stop once it is empty
+        pins.append(pin)
+        nxt = pin.checkpoint(df.where(F.col("id") > F.lit(len(pins) * 3)))
+        return nxt, pin.last_count == 0
+
+    run = fixpoint(step, spark.range(0, 10), 10, "shrink")
+    assert [r.round for r in run.trace] == [1, 2, 3]
+    assert [r.rows for r in run.trace] == [6, 3, 0]
+    assert all(r.wall_ms >= 0 for r in run.trace)
+    assert run.value.count() == 0
+    assert pins[0]._cached == []  # released on return
+
+
+def test_fixpoint_releases_pin_when_step_raises(spark):
+    from streamds_spark.operators.iterate import fixpoint
+
+    pins = []
+
+    def step(df, pin):
+        pins.append(pin)
+        pin.checkpoint(df)
+        raise ValueError("boom")
+
+    with pytest.raises(ValueError, match="boom"):
+        fixpoint(step, spark.range(0, 5), 3, "boom")
+    assert pins[0]._cached == []
+
+
+def test_fixpoint_exhaustion_raises_or_warns(spark):
+    from streamds_spark.operators.iterate import fixpoint
+
+    def step(n, pin):
+        return n + 1, False
+
+    with pytest.raises(RuntimeError, match="counter did not converge in 3 rounds"):
+        fixpoint(step, 0, 3, "counter")
+    with pytest.warns(UserWarning, match="counter did not converge in 3 rounds"):
+        run = fixpoint(step, 0, 3, "counter", exhausted="warn")
+    assert run.value == 3 and run.rounds == 3
+    assert [r.rows for r in run.trace] == [None, None, None]  # nothing pinned
+    with pytest.raises(ValueError, match="exhausted"):
+        fixpoint(step, 0, 3, "counter", exhausted="ignore")
+
+
+def test_fixpoint_materializes_only_a_fresh_pin_output(spark, monkeypatch):
+    """A result the final round pinned is counted before its cache goes;
+    a result that entered the round (already read) is not."""
+    from streamds_spark.operators.iterate import fixpoint
+
+    DataFrame = type(spark.range(1))  # the concrete class that counts
+    counted = []
+    real_count = DataFrame.count
+
+    def spy(self):
+        counted.append(self)
+        return real_count(self)
+
+    monkeypatch.setattr(DataFrame, "count", spy)
+
+    def fresh(df, pin):
+        return pin.checkpoint(df.select((F.col("id") + 1).alias("id"))), True
+
+    run = fixpoint(fresh, spark.range(0, 4), 5, "fresh")
+    assert any(d is run.value for d in counted)
+    assert sorted(r["id"] for r in run.value.collect()) == [1, 2, 3, 4]
+
+    counted.clear()
+
+    def entering(df, pin):
+        pin.checkpoint(df.select((F.col("id") + 1).alias("id")))
+        return df, True
+
+    start = spark.range(0, 4)
+    run = fixpoint(entering, start, 5, "entering")
+    assert run.value is start
+    assert not any(d is start for d in counted)
+
+
+def test_undirected_keeps_extra_columns_and_distinct_choice(spark):
+    from streamds_spark.operators.iterate import undirected
+
+    e = spark.createDataFrame([(1, 2, 7), (2, 1, 7)], "u bigint, v bigint, w bigint")
+    both = undirected(e, distinct=False)
+    assert both.columns == ["u", "v", "w"]
+    assert sorted(tuple(r) for r in both.collect()) == [
+        (1, 2, 7), (1, 2, 7), (2, 1, 7), (2, 1, 7)
+    ]
+    uniq = undirected(e, distinct=True)
+    assert sorted(tuple(r) for r in uniq.collect()) == [(1, 2, 7), (2, 1, 7)]

@@ -53,3 +53,28 @@ def test_default_stays_local(spark, tmp_path, monkeypatch):
     assert df.count() == 6
     # localCheckpoint leaves the tmp dir untouched
     assert not any(os.scandir(str(tmp_path)))
+
+
+def test_session_cleans_reliable_checkpoints(spark, tmp_path):
+    """get_spark turns on checkpoint cleaning, so a reliable cut's files go
+    once its RDD is garbage-collected and the directory stays bounded."""
+    import gc
+    import time
+
+    sc = spark.sparkContext
+    assert sc.getConf().get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
+    ckpt = str(tmp_path / "gc")
+    sc.setCheckpointDir(ckpt)
+
+    def parts():
+        return [f for _, _, fs in os.walk(ckpt) for f in fs if f.startswith("part-")]
+
+    df = spark.range(0, 1000).checkpoint(eager=True)
+    assert df.count() == 1000 and parts()
+    del df
+    deadline = time.time() + 10
+    while parts() and time.time() < deadline:
+        gc.collect()
+        sc._jvm.System.gc()  # noqa: SLF001 - the cleaner acts on JVM GC
+        time.sleep(0.2)
+    assert not parts(), "checkpoint files outlived their RDD"

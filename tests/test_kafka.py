@@ -1,4 +1,4 @@
-"""Kafka source integration — env-gated like the tws protobuf tests.
+"""Kafka source integration — env-gated.
 
 The sandbox ships neither a Kafka broker nor the spark-sql-kafka connector, so
 by default only the wrapper's error contract is testable. Set

@@ -211,11 +211,11 @@ def test_core_numbers_round_bound_and_consistency_with_kcore(spark):
     bridge = [(5, 50), (50, 51), (51, 52), (52, 100)]
     edges = k6 + k4 + bridge
     df = spark.createDataFrame(edges, ["u", "v"])
-    decomp, rounds = _core_numbers_with_rounds(df)
+    decomp, trace = _core_numbers_with_rounds(df)
     got = {r["node"]: r["core"] for r in decomp.collect()}
     assert got == _ref_core_numbers(edges)
     # the convergence depth tracks the propagation chain, not the node count
-    assert rounds <= 6, rounds
+    assert len(trace) <= 6, trace
     for k in (2, 3, 4, 5):
         want = set(_ref_kcore(edges, k))
         assert {n for n, c in got.items() if c >= k} == want, k
@@ -230,7 +230,10 @@ def test_core_numbers_active_set_shrinks_and_matches_dense(spark):
     reference iteration (per-round estimates are equal by induction)."""
     import random
 
-    from streamds_spark.operators.kcore import _core_numbers_with_rounds
+    from streamds_spark.operators.kcore import (
+        ACTIVE_SET_FRACTION,
+        _core_numbers_with_rounds,
+    )
 
     rng = random.Random(9)
     # dense core (converges immediately) + a long pendant chain (the change
@@ -243,19 +246,28 @@ def test_core_numbers_active_set_shrinks_and_matches_dense(spark):
     edges = k8 + chain + extra
     df = spark.createDataFrame(edges, ["u", "v"])
 
-    stats: dict = {}
-    decomp, rounds = _core_numbers_with_rounds(df, stats=stats)
+    decomp, trace = _core_numbers_with_rounds(df)
+    rounds = len(trace)
     got = {r["node"]: r["core"] for r in decomp.collect()}
     assert got == _ref_core_numbers(edges)
 
-    # round 1 always recomputes the whole graph (every estimate is fresh);
-    # after that the changed frontier collapses to the chain walk and the
-    # iteration must be running frontier-only
-    assert stats["mode"][0] == "full", stats
-    assert set(stats["mode"][1:]) == {"active"}, stats
-    assert all(c <= 3 for c in stats["changed"][1:]), stats
-    assert stats["changed"][-1] == 0  # the confirming round
-    assert stats["changed"][0] >= max(stats["changed"][1:])
+    # the trace's rows are the per-round changed counts; a round runs in
+    # full mode iff the previous round changed more than the active-set
+    # fraction of the nodes (round 1: every estimate is fresh)
+    changed = [r.rows for r in trace]
+    n_nodes = len({n for e in edges for n in e})
+    modes = [
+        "full" if prev > n_nodes * ACTIVE_SET_FRACTION else "active"
+        for prev in [n_nodes] + changed[:-1]
+    ]
+    # round 1 always recomputes the whole graph; after that the changed
+    # frontier collapses to the chain walk and the iteration must be
+    # running frontier-only
+    assert modes[0] == "full", trace
+    assert set(modes[1:]) == {"active"}, trace
+    assert all(c <= 3 for c in changed[1:]), trace
+    assert changed[-1] == 0  # the confirming round
+    assert changed[0] >= max(changed[1:])
 
     # round-count parity with a dense pure-python replay of the iteration
     nbrs: dict[int, list[int]] = {}

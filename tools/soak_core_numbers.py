@@ -54,20 +54,18 @@ def main() -> None:
             )
         edges = edges.localCheckpoint(eager=True)
         runs = []
-        stats: dict = {}
         for _ in range(2):
-            stats = {}
             t0 = time.time()
-            df, rounds = _core_numbers_with_rounds(edges, stats=stats)
+            df, trace = _core_numbers_with_rounds(edges)
             n = df.count()
             runs.append(time.time() - t0)
         walls.append(min(runs))
         out["factors"][f] = {
             "wall_s": round(min(runs), 2),
-            "rounds": rounds,
+            "rounds": len(trace),
             "n_nodes": n,
-            "modes": {m: stats["mode"].count(m) for m in set(stats["mode"])},
-            "changed_history": stats["changed"],
+            "changed_history": [r.rows for r in trace],
+            "round_ms": [round(r.wall_ms) for r in trace],
         }
     if len(walls) >= 2 and walls[0] > 0:
         decades = math.log10(factors[-1] / factors[0])
