@@ -1257,11 +1257,7 @@ def main(argv: list[str] | None = None) -> int:
         print(lineage_report(specs[args.query].fn(spark, args.sf_dir)))
     elif args.cmd == "quantiles":
         from streamds_spark.catalog import TABLES, load_table
-        from streamds_spark.operators.hdr import (
-            hdr_quantiles,
-            hdr_registers,
-            hdr_registers_signed,
-        )
+        from streamds_spark.operators.hdr import column_quantiles
 
         if args.table not in TABLES:
             parser.error(f"table must be one of {sorted(TABLES)}")
@@ -1277,25 +1273,13 @@ def main(argv: list[str] | None = None) -> int:
             if not all(0 < v <= 1 for v in qs.values()):
                 parser.error("quantile fractions must be in (0, 1]")
         df = load_table(spark, args.sf_dir, args.table)
-        dtypes = dict(df.dtypes)
-        if args.column not in dtypes:
-            parser.error(f"no column {args.column!r} in {args.table}")
-        integral = any(
-            dtypes[args.column].startswith(t)
-            for t in ("tinyint", "smallint", "int", "bigint")
-        )
-        expr = (
-            args.column
-            if args.scale == 1 and integral
-            else f"floor({args.column} * {int(args.scale)})"
-        )
-        regs_fn = hdr_registers_signed if args.signed else hdr_registers
-        rows = (
-            hdr_quantiles(regs_fn(df, expr), qs, signed=args.signed)
-            .orderBy("tag")
-            .collect()
-        )
-        for r in rows:
+        try:
+            sketch = column_quantiles(
+                df, args.column, qs, scale=args.scale, signed=args.signed
+            )
+        except ValueError as e:
+            parser.error(f"{args.table}: {e}")
+        for r in sketch.orderBy("tag").collect():
             print(
                 f"{r['tag']}:rank={r['rank']}/{r['n']}"
                 f" lo={r['lo']} mid={r['mid']} hi={r['hi']}"

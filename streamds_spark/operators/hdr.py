@@ -231,6 +231,35 @@ def hdr_quantiles(
     )
 
 
+_INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
+_NUMERIC_TYPES = _INTEGRAL_TYPES + ("float", "double", "decimal")
+
+
+def column_quantiles(
+    df: DataFrame,
+    column: str,
+    qs: dict[str, float],
+    scale: int = 1,
+    signed: bool = False,
+) -> DataFrame:
+    """hdr_quantiles of one numeric column of `df` (the server's and the
+    CLI's `quantiles` verb). Non-integral columns, and integral ones when
+    `scale` > 1, are sketched as floor(column * scale): a deterministic IEEE
+    product, so `scale` sets the sub-unit resolution. signed=True uses the
+    negative-mirror sketch, so negative values keep their mass. Raises
+    ValueError for a column `df` lacks or that is not numeric; the column
+    must name one of `df`'s columns exactly, so it is safe to interpolate."""
+    dtype = dict(df.dtypes).get(column)
+    if dtype is None:
+        raise ValueError(f"no column {column!r}")
+    if not dtype.startswith(_NUMERIC_TYPES):
+        raise ValueError(f"{column} is {dtype}, not numeric")
+    integral = dtype.startswith(_INTEGRAL_TYPES)
+    expr = column if scale == 1 and integral else f"floor({column} * {int(scale)})"
+    regs = (hdr_registers_signed if signed else hdr_registers)(df, expr)
+    return hdr_quantiles(regs, qs, signed=signed)
+
+
 def hdr_quantiles_by(
     registers: DataFrame,
     by: list[str],

@@ -117,6 +117,15 @@ collects `limit + 1` rows (default 100, hard cap 10_000) and reports
 `truncated` instead; a client that wants a full export should run the
 query to a sink, not through a socket. Cell values are JSON-coerced with
 `default=str` so dates/decimals/binary survive transport.
+
+Dispatch: `_req_kind` is the one classifier. A string `cmd` names the verb
+(one the server does not know is `invalid`); otherwise `sql` wins, then the
+`lineage` and `explain` flags, then `query`. `_VERBS` maps each kind to its
+handler and to whether it is guarded (admission caps, job group, watchdog
+— `QueryServer.run_guarded`). The kind names the audit record, the status
+counters and the handler alike, so the verb that is counted is the verb
+that ran. A handler refuses a request by raising `_Refused`, whose message
+is the whole error reply.
 """
 
 from __future__ import annotations
@@ -126,11 +135,20 @@ import os
 import socket
 import socketserver
 import threading
-from collections import deque
 import time as _time
 import uuid
+from collections import deque
 from typing import Any
 
+from pyspark.sql import SparkSession
+
+from streamds_spark.catalog import TABLES, load_table, register_views
+from streamds_spark.operators.ann import ann_probe_topk, load_index_meta
+from streamds_spark.operators.ann_incremental import ann_index_probe
+from streamds_spark.operators.hdr import column_quantiles
+from streamds_spark.operators.ivf import ivf_probe_topk, load_centroids
+from streamds_spark.operators.ivf_incremental import ivf_index_probe, load_ivf_meta
+from streamds_spark.plans.audit import formatted_plan, plan_facts
 from streamds_spark.registry import load_all
 from streamds_spark.session import scheduler_pool
 
@@ -142,68 +160,43 @@ MAX_TIMEOUT_S = 3600.0
 # statement node names that mutate state but are NOT Command subclasses in
 # Catalyst's parsed tree (INSERT parses to a plain unary node)
 _MUTATING_NODES = frozenset({"InsertIntoStatement", "InsertIntoDir"})
-
-
 # physical joins that loop over a whole build side for every streamed row
 _NESTED_LOOP_JOINS = ("BroadcastNestedLoopJoin", "CartesianProduct")
-# (id(session), sf_dir) -> the session's row-scan clone (_interruptible_sql)
-_ROW_SCAN_SESSIONS: dict[tuple[int, str], Any] = {}
-_ROW_SCAN_LOCK = threading.Lock()
 
 
-def _row_scan_session(spark, sf_dir: str):
-    """A clone of `spark` (same conf as of the first call, same SparkContext,
-    so the same job group and pool) whose table views are re-registered with
-    the vectorized Parquet/ORC readers off. A scan reads the conf of the
-    session its view was loaded in, so setting the conf on the clone alone
-    would not reach the pinned views. Built once per session and sf_dir."""
-    from pyspark.sql import SparkSession
-
-    from streamds_spark.catalog import register_views
-
-    key = (id(spark), sf_dir)
-    with _ROW_SCAN_LOCK:
-        rows = _ROW_SCAN_SESSIONS.get(key)
-        if rows is None or rows.sparkContext is not spark.sparkContext:
-            rows = SparkSession(
-                spark.sparkContext, spark._jsparkSession.cloneSession()  # noqa: SLF001
-            )
-            rows.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
-            rows.conf.set("spark.sql.orc.enableVectorizedReader", "false")
-            register_views(rows, sf_dir)
-            _ROW_SCAN_SESSIONS[key] = rows
-    return rows
+class _Refused(Exception):
+    """A request the server declines: the message is the whole error reply."""
 
 
-def _interruptible_sql(spark, sf_dir: str, sql: str):
-    """DataFrame for an ad-hoc query whose running tasks die on cancel.
-
-    A task only notices `interruptOnCancel` where its input iterator checks
-    for a kill. A vectorized Parquet/ORC scan checks once per columnar batch
-    (4096 rows), and a nested-loop join does (batch rows x build rows) of
-    work per batch: a 3-way cross join of a 6000-row table runs ~10^11
-    iterations between checks, so a cancelled task keeps its executor slot
-    for hours. Plans with such a join therefore run on row-based scans
-    (`_row_scan_session`), which check for a kill on every row. Every other
-    query keeps the vectorized readers."""
-    df = spark.sql(sql)
-    qe = df._jdf.queryExecution()  # noqa: SLF001
-    if "Join" not in qe.analyzed().toString():
-        return df
-    plan = qe.sparkPlan().toString()
-    if not any(op in plan for op in _NESTED_LOOP_JOINS):
-        return df
-    return _row_scan_session(spark, sf_dir).sql(sql)
+def _str_arg(req: dict, key: str, verb: str) -> str:
+    value = req.get(key)
+    if not isinstance(value, str) or not value:
+        raise _Refused(f"{verb} needs '{key}' (string)")
+    return value
 
 
-def _json_cell(v: Any) -> Any:
-    if isinstance(v, (bytes, bytearray)):
-        return v.hex()
-    return v
+def _int_arg(req: dict, key: str, default: int, hi: int, lo: int = 1) -> int:
+    """req[key] (else `default`) as an int in [lo, hi]. bool is an int
+    subclass and is refused: {"limit": true} must not read as 1."""
+    value = req.get(key, default)
+    if not isinstance(value, int) or isinstance(value, bool) or not lo <= value <= hi:
+        raise _Refused(f"{key} must be an int in [{lo}, {hi}]")
+    return value
 
 
-def _reject_non_query(spark, sql: str) -> str | None:
-    """Parse-level read-only guard: returns a refusal message unless the
+def _detail(req: Any) -> str | None:
+    """The audit record's detail: the query name, else the SQL's first 120
+    characters. Only str values, so a malformed field cannot fail it."""
+    if not isinstance(req, dict):
+        return None
+    for key in ("query", "sql"):
+        if isinstance(req.get(key), str) and req[key]:
+            return req[key][:120]
+    return None
+
+
+def _refuse_non_query(spark, sql: str) -> None:
+    """Parse-level read-only guard: refuses the request unless the
     statement is a pure logical query plan. A first-keyword check is NOT
     enough — Spark accepts CTE-prefixed mutations ('WITH t AS (...) INSERT
     INTO ...'), so the whole parsed tree is walked and any Command node
@@ -212,7 +205,7 @@ def _reject_non_query(spark, sql: str) -> str | None:
     try:
         plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)  # noqa: SLF001
     except Exception as e:  # noqa: BLE001 — surface the parse error verbatim
-        return f"parse error: {str(e)[:500]}"
+        raise _Refused(f"parse error: {str(e)[:500]}") from e
     command_cls = spark._jvm.java.lang.Class.forName(  # noqa: SLF001
         "org.apache.spark.sql.catalyst.plans.logical.Command"
     )
@@ -221,515 +214,395 @@ def _reject_non_query(spark, sql: str) -> str | None:
         node = stack.pop()
         name = node.nodeName()
         if command_cls.isInstance(node) or name in _MUTATING_NODES:
-            return (
+            raise _Refused(
                 f"read-only server: {name} is not allowed "
                 "(only query statements are served)"
             )
         it = node.children().iterator()
         while it.hasNext():
             stack.append(it.next())
-    return None
 
 
-def _maybe_cached(
-    df, req: dict, cache_dir: str | None, cache_max_bytes: "int | None" = None
-):
-    """Opt-in result cache for a request: with {"cache": true} on a server
-    started with a cache_dir, the FULL result is served from / materialized
-    into the plan-fingerprint cache (io/resultcache.py — nondeterministic
-    and in-memory plans are computed fresh by its own guards). Returns
-    (df_to_collect, cache_info_dict_or_None). The materialization runs the
-    whole query once — the tenant is opting into sink-style cost to make
-    every repeat of a dashboard query a parquet read of its result."""
-    if not req.get("cache") or cache_dir is None:
-        return df, None
-    from streamds_spark.io.resultcache import cached
+def _interruptible_sql(server: "QueryServer", sql: str):
+    """DataFrame for an ad-hoc query whose running tasks die on cancel.
 
-    res = cached(df, cache_dir, max_bytes=cache_max_bytes)
-    info = {"cache_hit": res.hit, "cacheable": res.cacheable}
-    if res.evicted:
-        info["evicted"] = res.evicted
-    return res.df, info
+    A task only notices `interruptOnCancel` where its input iterator checks
+    for a kill. A vectorized Parquet/ORC scan checks once per columnar batch
+    (4096 rows), and a nested-loop join does (batch rows x build rows) of
+    work per batch: a 3-way cross join of a 6000-row table runs ~10^11
+    iterations between checks, so a cancelled task keeps its executor slot
+    for hours. Plans with such a join therefore run on row-based scans
+    (`QueryServer.row_scan_session`), which check for a kill on every row.
+    Every other query keeps the vectorized readers."""
+    df = server.spark.sql(sql)
+    qe = df._jdf.queryExecution()  # noqa: SLF001
+    if "Join" not in qe.analyzed().toString():
+        return df
+    plan = qe.sparkPlan().toString()
+    if not any(op in plan for op in _NESTED_LOOP_JOINS):
+        return df
+    return server.row_scan_session().sql(sql)
 
 
-def _run_request(
-    spark,
-    default_sf_dir: str,
-    req: dict,
-    pool: str,
-    cache_dir: str | None = None,
-    cache_max_bytes: "int | None" = None,
-    view_roots: "list[str] | None" = None,
+def _rows(
+    server: "QueryServer", req: dict, pool: str, build, use_cache=True, **extra
 ) -> dict:
-    if req.get("cmd") == "ping":
-        return {"ok": True, "pong": True}
-    if req.get("cmd") == "list":
-        return {"ok": True, "queries": sorted(load_all())}
-    if req.get("cmd") == "tables":
-        # schema discovery for the SQL surface: every pinned view's columns
-        # and types (driver-side — schemas come from the catalog's readers,
-        # no jobs)
-        from streamds_spark.catalog import TABLES, load_table
-
-        return {
-            "ok": True,
-            "sf_dir": default_sf_dir,
-            "tables": {
-                t: dict(load_table(spark, default_sf_dir, t).dtypes)
-                for t in TABLES
-            },
-        }
-    if isinstance(req.get("sql"), str):
-        # raw read-only SQL over the TESTDATA views — the reference shell's
-        # SQL dialect served multi-tenant. Views are session-global and were
-        # registered ONCE at server start on the pinned sf_dir; accepting a
-        # per-request sf_dir here would createOrReplaceTempView under every
-        # concurrent tenant mid-query.
-        sql = req["sql"].strip()
-        err = _reject_non_query(spark, sql)
-        if err is not None:
-            return {"ok": False, "error": err}
-        if "sf_dir" in req and req["sf_dir"] != default_sf_dir:
-            return {
-                "ok": False,
-                "error": (
-                    "sql is served on the server's pinned sf_dir "
-                    f"({default_sf_dir!r}); per-request sf_dir would swap the "
-                    "shared views under concurrent tenants"
-                ),
-            }
-        if req.get("explain"):
-            # price ad-hoc SQL before running it, same facts as the
-            # registry-query explain
-            from streamds_spark.plans.audit import formatted_plan, plan_facts
-
-            df = spark.sql(sql)
-            facts = plan_facts(df)
-            return {
-                "ok": True,
-                "plan": formatted_plan(df),
-                "n_exchanges": facts.n_exchanges,
-                "n_global_windows": facts.n_global_windows,
-            }
-        limit = req.get("limit", DEFAULT_LIMIT)
-        if not isinstance(limit, int) or not (1 <= limit <= MAX_LIMIT):
-            return {"ok": False, "error": f"limit must be an int in [1, {MAX_LIMIT}]"}
-        with scheduler_pool(spark, pool):
-            df, cache_info = _maybe_cached(
-                _interruptible_sql(spark, default_sf_dir, sql), req, cache_dir, cache_max_bytes
-            )
-            rows = df.limit(limit + 1).collect()
-        truncated = len(rows) > limit
-        rows = rows[:limit]
-        resp = {
-            "ok": True,
-            "columns": df.columns,
-            "rows": [[_json_cell(v) for v in r] for r in rows],
-            "n_rows": len(rows),
-            "truncated": truncated,
-        }
-        if cache_info is not None:
-            resp.update(cache_info)
-        return resp
-    if req.get("cmd") == "views":
-        # read-only listing of a pipeline work dir's registered views with
-        # live store status — driver-side file metadata only, no jobs. Same
-        # client-supplied-path posture as view_report: disabled without a
-        # startup allowlist, realpath-pinned inside it.
-        work_dir = req.get("work_dir")
-        if not isinstance(work_dir, str) or not work_dir:
-            return {"ok": False, "error": "views needs 'work_dir' (string)"}
-        if view_roots is None:
-            return {
-                "ok": False,
-                "error": "views is disabled on this server: start it with "
-                "view_roots=[dir, ...] (--view-root) to allowlist the "
-                "readable view dirs",
-            }
-        real = os.path.realpath(work_dir)
-        if not any(
-            real == root or real.startswith(root + os.sep)
-            for root in view_roots
-        ):
-            return {
-                "ok": False,
-                "error": "views: work_dir is outside the server's "
-                "view_roots allowlist",
-            }
-        from streamds_spark.streaming.viewstore import (
-            registered_views,
-            spec_to_dict,
-            view_status,
-        )
-
-        try:
-            reg = registered_views(work_dir)
-        except ValueError as e:
-            return {"ok": False, "error": str(e)}
-        out = []
-        for name, (spec, vdir) in sorted(reg.items()):
-            entry = {"name": name, "work_dir": vdir, "spec": spec_to_dict(spec)}
-            # the manifest can declare a view work dir ANYWHERE
-            # (register_view accepts an explicit path): reading its store
-            # metadata must pass the same allowlist the client-supplied
-            # path did, or the manifest becomes a read-outside-the-fence
-            # indirection view_report itself would refuse
-            vreal = os.path.realpath(vdir)
-            if any(
-                vreal == root or vreal.startswith(root + os.sep)
-                for root in view_roots
-            ):
-                entry.update(view_status(vdir))
-            else:
-                entry["error"] = (
-                    "view work_dir is outside the server's view_roots "
-                    "allowlist — status not read"
-                )
-            out.append(entry)
-        return {"ok": True, "views": out, "n_views": len(out)}
-    if req.get("cmd") == "view_report":
-        # read-only probe of an incremental materialized view
-        # (streaming/viewstore.py): fold the view's committed partial dirs —
-        # the read cost is (keys-in-store rows) x (committed dirs), never a
-        # source scan, so a dashboard tenant refreshes from k-row state.
-        # recover=False keeps the verb STRICTLY read-only (the reader-side
-        # rebuild self-heal is a rename — a write — and writes require the
-        # takedown verb's allow_writes posture).
-        from streamds_spark.streaming.viewstore import (
-            ViewSpec,
-            rebuild_required,
-            view_report,
-        )
-
-        work_dir = req.get("work_dir")
-        keys = req.get("keys")
-        aggs = req.get("aggs")
-        if not isinstance(work_dir, str) or not work_dir:
-            return {"ok": False, "error": "view_report needs 'work_dir' (string)"}
-        # work_dir is a CLIENT-SUPPLIED filesystem path — without a pin any
-        # tenant could fold parquet from any readable path on the host. The
-        # foldable dirs are an OPERATOR decision at startup (the same
-        # posture as the sql verb's pinned sf_dir): the verb is disabled
-        # until the server is started with a view_roots allowlist, and a
-        # request must resolve (realpath — symlinks can't escape) inside one
-        if view_roots is None:
-            return {
-                "ok": False,
-                "error": "view_report is disabled on this server: start it "
-                "with view_roots=[dir, ...] (--view-root) to allowlist the "
-                "foldable view dirs",
-            }
-        real = os.path.realpath(work_dir)
-        if not any(
-            real == root or real.startswith(root + os.sep)
-            for root in view_roots
-        ):
-            return {
-                "ok": False,
-                "error": "view_report: work_dir is outside the server's "
-                "view_roots allowlist",
-            }
-        if not isinstance(keys, list) or not all(
-            isinstance(k, str) for k in keys
-        ):
-            return {"ok": False, "error": "view_report needs 'keys': [str, ...]"}
-        if not isinstance(aggs, dict) or not all(
-            isinstance(v, (list, tuple)) and len(v) == 2 for v in aggs.values()
-        ):
-            return {
-                "ok": False,
-                "error": "view_report needs 'aggs': {out: [kind, col-or-null]}",
-            }
-        limit = req.get("limit", DEFAULT_LIMIT)
-        # bool is an int subclass (the takedown doc_ids contract): refuse it
-        if (
-            not isinstance(limit, int)
-            or isinstance(limit, bool)
-            or not (1 <= limit <= MAX_LIMIT)
-        ):
-            return {"ok": False, "error": f"limit must be an int in [1, {MAX_LIMIT}]"}
-        try:
-            kw = {"kmv_k": int(req["kmv_k"])} if "kmv_k" in req else {}
-            spec = ViewSpec(
-                keys=tuple(keys),
-                aggs={o: (v[0], v[1]) for o, v in aggs.items()},
-                **kw,
-            )
-        except (ValueError, TypeError) as e:
-            return {"ok": False, "error": f"view spec: {e}"}
-        with scheduler_pool(spark, pool):
-            df = view_report(spark, work_dir, spec, recover=False)
-            rows = df.limit(limit + 1).collect()
-        truncated = len(rows) > limit
-        rows = rows[:limit]
-        resp = {
-            "ok": True,
-            "work_dir": work_dir,
-            "columns": df.columns,
-            "rows": [[_json_cell(v) for v in r] for r in rows],
-            "n_rows": len(rows),
-            "truncated": truncated,
-        }
-        # a pending rebuild flag (set by the takedown cascade on a view
-        # whose spec cannot subtract) must reach socket readers too — the
-        # numbers still include deleted docs until the operator rebuilds,
-        # and the CLI's WARNING alone would leave dashboards blind to it
-        pending = rebuild_required(work_dir)
-        if pending:
-            resp["rebuild_required"] = pending
-        return resp
-    if req.get("cmd") == "quantiles":
-        # sketch-probe endpoint: HDR log-linear quantiles over a pinned
-        # table's numeric column (operators/hdr.py). One map-only bucket
-        # pass + a <=1888-key aggregate — the response is len(qs) rows at
-        # ANY table size, so no limit/truncation machinery is needed; runs
-        # under the same job-group watchdog as every data-bearing request.
-        import re as _re
-
-        from streamds_spark.catalog import TABLES, load_table
-        from streamds_spark.operators.hdr import (
-            hdr_quantiles,
-            hdr_registers,
-            hdr_registers_signed,
-        )
-
-        table = req.get("table")
-        column = req.get("column")
-        scale = req.get("scale", 1)
-        signed = req.get("signed", False)
-        if not isinstance(signed, bool):
-            return {"ok": False, "error": "signed must be a boolean"}
-        if table not in TABLES:
-            return {"ok": False, "error": f"table must be one of {sorted(TABLES)}"}
-        if not isinstance(column, str) or not _re.fullmatch(
-            r"[A-Za-z_][A-Za-z0-9_]*", column
-        ):
-            return {"ok": False, "error": "column must be a plain identifier"}
-        if not isinstance(scale, int) or not (1 <= scale <= 1_000_000_000):
-            return {"ok": False, "error": "scale must be an int in [1, 1e9]"}
-        qs = req.get("qs") or {"p50": 0.5, "p90": 0.9, "p99": 0.99}
-        if not (
-            isinstance(qs, dict)
-            and 0 < len(qs) <= 16
-            and all(
-                isinstance(t, str) and 0 < len(t) <= 16
-                and isinstance(q, (int, float)) and 0 < q <= 1
-                for t, q in qs.items()
-            )
-        ):
-            return {"ok": False, "error": "qs must map <=16 tags to q in (0, 1]"}
-        df = load_table(spark, default_sf_dir, table)
-        dtypes = dict(df.dtypes)
-        if column not in dtypes:
-            return {"ok": False, "error": f"no column {column!r} in {table}"}
-        if not any(
-            dtypes[column].startswith(t)
-            for t in ("tinyint", "smallint", "int", "bigint", "float", "double", "decimal")
-        ):
-            return {"ok": False, "error": f"{column} is {dtypes[column]}, not numeric"}
-        # non-integer columns are floored after scaling (deterministic IEEE
-        # product) — callers pick `scale` for sub-unit resolution; integral
-        # columns skip the floor only when unscaled
-        integral = any(
-            dtypes[column].startswith(t)
-            for t in ("tinyint", "smallint", "int", "bigint")
-        )
-        expr = (
-            column
-            if scale == 1 and integral
-            else f"floor({column} * {scale})"
-        )
-        # signed=true routes through the negative-bucket-mirror sketch so
-        # delta/P&L-class columns keep their negative mass (the default
-        # sketch excludes negatives by the non-negative contract)
-        regs_fn = hdr_registers_signed if signed else hdr_registers
-        with scheduler_pool(spark, pool):
-            rows = hdr_quantiles(
-                regs_fn(df, expr), dict(qs), signed=signed
-            ).collect()
-        return {
-            "ok": True,
-            "table": table,
-            "column": column,
-            "scale": scale,
-            "signed": signed,
-            "quantiles": {
-                r["tag"]: {
-                    "rank": r["rank"], "n": r["n"],
-                    "lo": r["lo"], "hi": r["hi"], "mid": r["mid"],
-                }
-                for r in rows
-            },
-        }
-    if req.get("cmd") == "ann":
-        # vector-search endpoint over a persisted index: kind 'lsh' (default,
-        # hyperplane-bucket partitions) or 'ivf' (coarse-quantizer lists) —
-        # both read ONLY the probe's partitions (static pruning), k rows back
-        vec = req.get("vector")
-        index = req.get("index")
-        k = req.get("k", 10)
-        kind = req.get("kind", "lsh")
-        if not isinstance(index, str):
-            return {"ok": False, "error": "ann needs 'index' (index dir path)"}
-        if not (
-            isinstance(vec, list)
-            and vec
-            and all(isinstance(x, (int, float)) for x in vec)
-        ):
-            return {"ok": False, "error": "ann needs 'vector' (list of numbers)"}
-        if not isinstance(k, int) or not (1 <= k <= 1000):
-            return {"ok": False, "error": "k must be an int in [1, 1000]"}
-        qvec = [float(x) for x in vec]
-        if kind == "lsh":
-            from streamds_spark.operators.ann import ann_probe_topk, load_index_meta
-
-            flip = req.get("flip_bits", 0)
-            try:
-                meta = load_index_meta(index)
-            except OSError as e:
-                return {"ok": False, "error": f"no index meta at {index!r}: {e}"}
-            if len(qvec) != meta["dim"]:
-                return {
-                    "ok": False,
-                    "error": f"vector dim {len(qvec)} != index dim {meta['dim']}",
-                }
-            probe = lambda: ann_probe_topk(  # noqa: E731
-                spark, index, qvec, k=k,
-                n_planes=meta["n_planes"], n_flip_bits=flip,
-            )
-        elif kind == "lsh-inc":
-            # the incrementally-maintained (streamed) LSH index — same pruned
-            # probe over its committed batch/segment dirs
-            from streamds_spark.operators.ann import load_index_meta
-            from streamds_spark.operators.ann_incremental import ann_index_probe
-
-            flip = req.get("flip_bits", 0)
-            try:
-                meta = load_index_meta(index)
-            except OSError as e:
-                return {"ok": False, "error": f"no index meta at {index!r}: {e}"}
-            if len(qvec) != meta["dim"]:
-                return {
-                    "ok": False,
-                    "error": f"vector dim {len(qvec)} != index dim {meta['dim']}",
-                }
-            probe = lambda: ann_index_probe(  # noqa: E731
-                spark, index, qvec, k=k, n_flip_bits=flip
-            )
-        elif kind == "ivf":
-            from streamds_spark.operators.ivf import ivf_probe_topk, load_centroids
-
-            n_probe = req.get("n_probe", 2)
-            if not isinstance(n_probe, int) or not (1 <= n_probe <= 64):
-                return {"ok": False, "error": "n_probe must be an int in [1, 64]"}
-            try:
-                dim = len(load_centroids(index)[0])
-            except OSError as e:
-                return {"ok": False, "error": f"no centroids at {index!r}: {e}"}
-            if len(qvec) != dim:
-                return {
-                    "ok": False,
-                    "error": f"vector dim {len(qvec)} != index dim {dim}",
-                }
-            probe = lambda: ivf_probe_topk(  # noqa: E731
-                spark, index, qvec, k=k, n_probe=n_probe
-            )
-        elif kind == "ivf-inc":
-            # the incrementally-maintained IVF index (frozen quantizer) —
-            # pruned probe over its committed batch/segment dirs
-            from streamds_spark.operators.ivf_incremental import (
-                ivf_index_probe,
-                load_ivf_meta,
-            )
-
-            n_probe = req.get("n_probe", 2)
-            if not isinstance(n_probe, int) or not (1 <= n_probe <= 64):
-                return {"ok": False, "error": "n_probe must be an int in [1, 64]"}
-            try:
-                meta = load_ivf_meta(index)
-            except OSError as e:
-                return {"ok": False, "error": f"no index meta at {index!r}: {e}"}
-            if len(qvec) != meta["dim"]:
-                return {
-                    "ok": False,
-                    "error": f"vector dim {len(qvec)} != index dim {meta['dim']}",
-                }
-            probe = lambda: ivf_index_probe(  # noqa: E731
-                spark, index, qvec, k=k, n_probe=n_probe
-            )
-        else:
-            return {"ok": False, "error": f"unknown ann kind {kind!r}"}
-        with scheduler_pool(spark, pool):
-            rows = probe().collect()
-        return {
-            "ok": True,
-            "kind": kind,
-            "neighbors": [
-                {"vec_id": r["vec_id"], "label": r["label"], "cos_sim": r["cos_sim"]}
-                for r in rows
-            ],
-        }
-    name = req.get("query")
-    if not isinstance(name, str):
-        return {"ok": False, "error": "request needs 'query' or 'cmd'"}
-    specs = load_all()
-    if name not in specs:
-        return {"ok": False, "error": f"unknown query {name!r}"}
-    sf_dir = req.get("sf_dir", default_sf_dir)
-    if req.get("lineage"):
-        # impact analysis: which source columns feed each output column
-        from streamds_spark.plans.lineage import column_lineage
-
-        lin = column_lineage(specs[name].fn(spark, sf_dir))
-        return {
-            "ok": True,
-            "query": name,
-            "lineage": {c: sorted([t, col] for t, col in s) for c, s in lin.items()},
-        }
-    if req.get("explain"):
-        # price the query before running it: plan text + the census facts
-        # (exchanges, global windows) a tenant checks before a big submit
-        from streamds_spark.plans.audit import formatted_plan, plan_facts
-
-        df = specs[name].fn(spark, sf_dir)
-        facts = plan_facts(df)
-        return {
-            "ok": True,
-            "query": name,
-            "plan": formatted_plan(df),
-            "n_exchanges": facts.n_exchanges,
-            "n_global_windows": facts.n_global_windows,
-        }
-    limit = req.get("limit", DEFAULT_LIMIT)
-    if not isinstance(limit, int) or not (1 <= limit <= MAX_LIMIT):
-        return {"ok": False, "error": f"limit must be an int in [1, {MAX_LIMIT}]"}
+    """The rows reply of sql, query and view_report: at most `limit` rows of
+    the DataFrame `build()` returns, collected as `limit + 1` to tell the
+    client it was truncated. With {"cache": true} on a server started with
+    a cache_dir (and `use_cache`), the FULL result is first served from or
+    materialized into the plan-fingerprint cache (io/resultcache.py, whose
+    own guards compute nondeterministic and in-memory plans fresh): the
+    tenant opts into sink-style cost once so that every repeat of a
+    dashboard query is a parquet read of its result."""
+    limit = _int_arg(req, "limit", DEFAULT_LIMIT, MAX_LIMIT)
+    info: dict = {}
     # per-connection FAIR pool: concurrent tenants each get a fair share of
     # the executor slots (thread-scoped local property, see session.py)
-    with scheduler_pool(spark, pool):
-        df, cache_info = _maybe_cached(
-            specs[name].fn(spark, sf_dir), req, cache_dir, cache_max_bytes
-        )
+    with scheduler_pool(server.spark, pool):
+        df = build()
+        if use_cache and req.get("cache") and server.cache_dir is not None:
+            from streamds_spark.io.resultcache import cached
+
+            res = cached(df, server.cache_dir, max_bytes=server.cache_max_bytes)
+            df, info = res.df, {"cache_hit": res.hit, "cacheable": res.cacheable}
+            if res.evicted:
+                info["evicted"] = res.evicted
         rows = df.limit(limit + 1).collect()
-    truncated = len(rows) > limit
-    rows = rows[:limit]
-    resp = {
+    return {
+        "ok": True,
+        **extra,
+        "columns": df.columns,
+        "rows": [
+            [v.hex() if isinstance(v, (bytes, bytearray)) else v for v in r]
+            for r in rows[:limit]
+        ],
+        "n_rows": min(len(rows), limit),
+        "truncated": len(rows) > limit,
+        **info,
+    }
+
+
+def _explain(df, **extra) -> dict:
+    """Price a query before running it: plan text + the census facts
+    (exchanges, global windows) a tenant checks before a big submit."""
+    facts = plan_facts(df)
+    return {
+        "ok": True,
+        **extra,
+        "plan": formatted_plan(df),
+        "n_exchanges": facts.n_exchanges,
+        "n_global_windows": facts.n_global_windows,
+    }
+
+
+# -- verb handlers: (server, req, pool) -> reply ------------------------------
+
+
+def _tables(server: "QueryServer", req: dict, pool: str) -> dict:
+    # schema discovery for the SQL surface: every pinned view's columns and
+    # types (driver-side — schemas come from the catalog's readers, no jobs)
+    spark, sf_dir = server.spark, server.sf_dir
+    tables = {t: dict(load_table(spark, sf_dir, t).dtypes) for t in TABLES}
+    return {"ok": True, "sf_dir": sf_dir, "tables": tables}
+
+
+def _sql(server: "QueryServer", req: dict, pool: str) -> dict:
+    # raw read-only SQL over the TESTDATA views — the reference shell's SQL
+    # dialect served multi-tenant. Views are session-global and were
+    # registered ONCE at server start on the pinned sf_dir; accepting a
+    # per-request sf_dir here would createOrReplaceTempView under every
+    # concurrent tenant mid-query.
+    sql = _str_arg(req, "sql", "sql").strip()
+    _refuse_non_query(server.spark, sql)
+    if req.get("sf_dir", server.sf_dir) != server.sf_dir:
+        raise _Refused(
+            f"sql is served on the server's pinned sf_dir ({server.sf_dir!r}); "
+            "per-request sf_dir would swap the shared views under concurrent "
+            "tenants"
+        )
+    if req.get("explain"):
+        return _explain(server.spark.sql(sql))
+    return _rows(server, req, pool, lambda: _interruptible_sql(server, sql))
+
+
+def _registry_query(server: "QueryServer", req: dict):
+    """(name, build) of the request's registered query; build() runs its
+    plan builder on the request's sf_dir (default: the server's)."""
+    name = _str_arg(req, "query", "request")
+    specs = load_all()
+    if name not in specs:
+        raise _Refused(f"unknown query {name!r}")
+    sf_dir = req.get("sf_dir", server.sf_dir)
+    return name, lambda: specs[name].fn(server.spark, sf_dir)
+
+
+def _query(server: "QueryServer", req: dict, pool: str) -> dict:
+    name, build = _registry_query(server, req)
+    return _rows(server, req, pool, build, query=name)
+
+
+def _explain_query(server: "QueryServer", req: dict, pool: str) -> dict:
+    name, build = _registry_query(server, req)
+    return _explain(build(), query=name)
+
+
+def _lineage(server: "QueryServer", req: dict, pool: str) -> dict:
+    # impact analysis: which source columns feed each output column
+    from streamds_spark.plans.lineage import column_lineage
+
+    name, build = _registry_query(server, req)
+    lin = column_lineage(build())
+    return {
         "ok": True,
         "query": name,
-        "columns": df.columns,
-        "rows": [[_json_cell(v) for v in r] for r in rows],
-        "n_rows": len(rows),
-        "truncated": truncated,
+        "lineage": {c: sorted([t, col] for t, col in s) for c, s in lin.items()},
     }
-    if cache_info is not None:
-        resp.update(cache_info)
+
+
+def _view_dir(server: "QueryServer", req: dict, verb: str) -> str:
+    """The request's work_dir. It is a CLIENT-SUPPLIED filesystem path:
+    without a pin any tenant could read parquet from any readable path on
+    the host. The readable dirs are an OPERATOR decision at startup (the
+    same posture as the sql verb's pinned sf_dir): the view verbs are
+    disabled until the server is started with a view_roots allowlist, and
+    a request must resolve (realpath — symlinks can't escape) inside it."""
+    work_dir = _str_arg(req, "work_dir", verb)
+    if server.view_roots is None:
+        raise _Refused(
+            f"{verb} is disabled on this server: start it with "
+            "view_roots=[dir, ...] (--view-root) to allowlist the readable "
+            "view dirs"
+        )
+    if not server.in_view_roots(work_dir):
+        raise _Refused(f"{verb}: work_dir is outside the server's view_roots allowlist")
+    return work_dir
+
+
+def _views(server: "QueryServer", req: dict, pool: str) -> dict:
+    # read-only listing of a pipeline work dir's registered views with live
+    # store status — driver-side file metadata only, no jobs
+    from streamds_spark.streaming.viewstore import (
+        registered_views,
+        spec_to_dict,
+        view_status,
+    )
+
+    work_dir = _view_dir(server, req, "views")
+    try:
+        reg = registered_views(work_dir)
+    except ValueError as e:
+        raise _Refused(str(e)) from e
+    out = []
+    for name, (spec, vdir) in sorted(reg.items()):
+        entry = {"name": name, "work_dir": vdir, "spec": spec_to_dict(spec)}
+        # the manifest can declare a view work dir ANYWHERE (register_view
+        # accepts an explicit path): reading its store metadata must pass
+        # the same allowlist the client-supplied path did, or the manifest
+        # becomes a read-outside-the-fence indirection
+        if server.in_view_roots(vdir):
+            entry.update(view_status(vdir))
+        else:
+            entry["error"] = (
+                "view work_dir is outside the server's view_roots "
+                "allowlist — status not read"
+            )
+        out.append(entry)
+    return {"ok": True, "views": out, "n_views": len(out)}
+
+
+def _view_report(server: "QueryServer", req: dict, pool: str) -> dict:
+    # read-only probe of an incremental materialized view
+    # (streaming/viewstore.py): fold the view's committed partial dirs —
+    # the read cost is (keys-in-store rows) x (committed dirs), never a
+    # source scan, so a dashboard tenant refreshes from k-row state.
+    # recover=False keeps the verb STRICTLY read-only (the reader-side
+    # rebuild self-heal is a rename — a write — and writes require the
+    # takedown verb's allow_writes posture).
+    from streamds_spark.streaming.viewstore import (
+        ViewSpec,
+        rebuild_required,
+        view_report,
+    )
+
+    work_dir = _view_dir(server, req, "view_report")
+    keys, aggs = req.get("keys"), req.get("aggs")
+    if not isinstance(keys, list) or not all(isinstance(k, str) for k in keys):
+        raise _Refused("view_report needs 'keys': [str, ...]")
+    if not isinstance(aggs, dict) or not all(
+        isinstance(v, (list, tuple)) and len(v) == 2 for v in aggs.values()
+    ):
+        raise _Refused("view_report needs 'aggs': {out: [kind, col-or-null]}")
+    try:
+        kw = {"kmv_k": int(req["kmv_k"])} if "kmv_k" in req else {}
+        spec = ViewSpec(
+            keys=tuple(keys), aggs={o: (v[0], v[1]) for o, v in aggs.items()}, **kw
+        )
+    except (ValueError, TypeError) as e:
+        raise _Refused(f"view spec: {e}") from e
+    resp = _rows(
+        server, req, pool,
+        lambda: view_report(server.spark, work_dir, spec, recover=False),
+        use_cache=False, work_dir=work_dir,
+    )
+    # a pending rebuild flag (set by the takedown cascade on a view whose
+    # spec cannot subtract) must reach socket readers too — the numbers
+    # still include deleted docs until the operator rebuilds, and the CLI's
+    # WARNING alone would leave dashboards blind to it
+    pending = rebuild_required(work_dir)
+    if pending:
+        resp["rebuild_required"] = pending
     return resp
 
 
-def _req_kind(req: dict) -> str:
+def _quantiles(server: "QueryServer", req: dict, pool: str) -> dict:
+    # sketch-probe endpoint: HDR log-linear quantiles over a pinned table's
+    # numeric column (operators/hdr.column_quantiles). One map-only bucket
+    # pass + a <=1888-key aggregate — the response is len(qs) rows at ANY
+    # table size, so no limit/truncation machinery is needed.
+    table, signed = req.get("table"), req.get("signed", False)
+    if not isinstance(signed, bool):
+        raise _Refused("signed must be a boolean")
+    if table not in TABLES:
+        raise _Refused(f"table must be one of {sorted(TABLES)}")
+    column = _str_arg(req, "column", "quantiles")
+    scale = _int_arg(req, "scale", 1, 1_000_000_000)
+    qs = req.get("qs") or {"p50": 0.5, "p90": 0.9, "p99": 0.99}
+    if not (
+        isinstance(qs, dict)
+        and 0 < len(qs) <= 16
+        and all(
+            isinstance(t, str) and 0 < len(t) <= 16
+            and isinstance(q, (int, float)) and 0 < q <= 1
+            for t, q in qs.items()
+        )
+    ):
+        raise _Refused("qs must map <=16 tags to q in (0, 1]")
+    df = load_table(server.spark, server.sf_dir, table)
+    try:
+        sketch = column_quantiles(df, column, dict(qs), scale=scale, signed=signed)
+    except ValueError as e:
+        raise _Refused(f"{table}: {e}") from e
+    with scheduler_pool(server.spark, pool):
+        rows = sketch.collect()
+    return {
+        "ok": True,
+        "table": table,
+        "column": column,
+        "scale": scale,
+        "signed": signed,
+        "quantiles": {
+            r["tag"]: {k: r[k] for k in ("rank", "n", "lo", "hi", "mid")}
+            for r in rows
+        },
+    }
+
+
+# ann kind -> (index meta loader, probe(spark, index, vector, k, meta, req)).
+# Every probe reads ONLY its partitions of the index (static pruning): 'lsh'
+# hyperplane buckets, 'ivf' coarse-quantizer lists, and the '-inc' kinds the
+# same over the committed batch/segment dirs of a stream-maintained index.
+_ANN_KINDS = {
+    "lsh": (
+        load_index_meta,
+        lambda spark, index, vec, k, meta, req: ann_probe_topk(
+            spark, index, vec, k=k, n_planes=meta["n_planes"],
+            n_flip_bits=req.get("flip_bits", 0),
+        ),
+    ),
+    "lsh-inc": (
+        load_index_meta,
+        lambda spark, index, vec, k, meta, req: ann_index_probe(
+            spark, index, vec, k=k, n_flip_bits=req.get("flip_bits", 0)
+        ),
+    ),
+    "ivf": (
+        lambda index: {"dim": len(load_centroids(index)[0])},
+        lambda spark, index, vec, k, meta, req: ivf_probe_topk(
+            spark, index, vec, k=k, n_probe=_int_arg(req, "n_probe", 2, 64)
+        ),
+    ),
+    "ivf-inc": (
+        load_ivf_meta,
+        lambda spark, index, vec, k, meta, req: ivf_index_probe(
+            spark, index, vec, k=k, n_probe=_int_arg(req, "n_probe", 2, 64)
+        ),
+    ),
+}
+
+
+def _ann(server: "QueryServer", req: dict, pool: str) -> dict:
+    # vector search over a persisted index, k rows back
+    index = _str_arg(req, "index", "ann")
+    vec, kind = req.get("vector"), req.get("kind", "lsh")
+    if not (
+        isinstance(vec, list) and vec and all(isinstance(x, (int, float)) for x in vec)
+    ):
+        raise _Refused("ann needs 'vector' (list of numbers)")
+    k = _int_arg(req, "k", 10, 1000)
+    if kind not in _ANN_KINDS:
+        raise _Refused(f"unknown ann kind {kind!r}")
+    load_meta, probe = _ANN_KINDS[kind]
+    try:
+        meta = load_meta(index)
+    except OSError as e:
+        raise _Refused(f"no index meta at {index!r}: {e}") from e
+    vec = [float(x) for x in vec]
+    if len(vec) != meta["dim"]:
+        raise _Refused(f"vector dim {len(vec)} != index dim {meta['dim']}")
+    with scheduler_pool(server.spark, pool):
+        rows = probe(server.spark, index, vec, k, meta, req).collect()
+    return {
+        "ok": True,
+        "kind": kind,
+        "neighbors": [
+            {"vec_id": r["vec_id"], "label": r["label"], "cos_sim": r["cos_sim"]}
+            for r in rows
+        ],
+    }
+
+
+def _invalid(server: "QueryServer", req: Any, pool: str) -> dict:
+    cmd = req.get("cmd") if isinstance(req, dict) else None
+    if isinstance(cmd, str):
+        raise _Refused(f"unknown cmd {cmd!r}")
+    raise _Refused("request needs 'query', 'sql' or 'cmd'")
+
+
+# kind -> (handler, guarded). Guarded kinds run through
+# QueryServer.run_guarded: admission caps, their own job group and the
+# watchdog. The rest answer from driver-side state (takedown serializes on
+# its own lock), so they keep working under saturation — operability must
+# survive it, and cancel is how an operator RELIEVES it.
+_VERBS = {
+    "ping": (lambda server, req, pool: {"ok": True, "pong": True}, False),
+    "list": (lambda server, req, pool: {"ok": True, "queries": sorted(load_all())}, False),
+    "tables": (_tables, False),
+    # operational heartbeat: the reference leader prints per-query latency
+    # and counts to its console; this is that signal as a queryable endpoint
+    "status": (lambda server, req, pool: {"ok": True, "status": server.status()}, False),
+    "pipeline_status": (lambda server, req, pool: server.pipeline_status(req), False),
+    "cancel": (lambda server, req, pool: server.cancel(req), False),
+    "takedown": (lambda server, req, pool: server.takedown(req, pool), False),
+    "invalid": (_invalid, False),
+    "sql": (_sql, True),
+    "query": (_query, True),
+    "explain": (_explain_query, True),
+    "lineage": (_lineage, True),
+    "views": (_views, True),
+    "view_report": (_view_report, True),
+    "quantiles": (_quantiles, True),
+    "ann": (_ann, True),
+}
+
+
+def _req_kind(req: Any) -> str:
+    """The request's kind: it names the audit record and the status
+    counters, and it picks the handler (module docstring, Dispatch)."""
     if not isinstance(req, dict):
         return "invalid"
     if isinstance(req.get("cmd"), str):
-        return req["cmd"]
+        return req["cmd"] if req["cmd"] in _VERBS else "invalid"
     if isinstance(req.get("sql"), str):
         return "sql"
     if req.get("lineage"):
@@ -739,12 +612,6 @@ def _req_kind(req: dict) -> str:
     if isinstance(req.get("query"), str):
         return "query"
     return "invalid"
-
-
-# request kinds answered from driver-side state only — no job group/watchdog
-_CONTROL_KINDS = frozenset(
-    {"ping", "list", "tables", "status", "pipeline_status", "cancel", "invalid"}
-)
 
 
 class _Handler(socketserver.StreamRequestHandler):
@@ -758,33 +625,20 @@ class _Handler(socketserver.StreamRequestHandler):
             line = line.strip()
             if not line:
                 continue
-            kind = "invalid"
-            req = None
+            kind, detail = "invalid", None
             t_req = _time.perf_counter()
             try:
                 req = json.loads(line)
-                kind = _req_kind(req)
-                if kind == "status":
-                    # operational heartbeat: uptime + per-kind served/error
-                    # counters (the reference leader prints per-query
-                    # latency/counts to console; this is that signal as a
-                    # queryable endpoint)
-                    resp = {"ok": True, "status": server.status()}
-                elif kind == "cancel":
-                    resp = server.cancel(req)
-                elif kind == "pipeline_status":
-                    resp = server.pipeline_status(req)
-                elif kind == "takedown":
-                    resp = server.takedown(req, pool)
-                elif kind in _CONTROL_KINDS:
-                    resp = _run_request(server.spark, server.sf_dir, req, pool)
+                kind, detail = _req_kind(req), _detail(req)
+                handler, guarded = _VERBS[kind]
+                if guarded:
+                    resp = server.run_guarded(handler, req, pool)
                 else:
-                    resp = server.run_guarded(req, pool)
+                    resp = handler(server, req, pool)
+            except _Refused as e:
+                resp = {"ok": False, "error": str(e)}
             except Exception as e:  # noqa: BLE001 — protocol boundary
                 resp = {"ok": False, "error": f"{type(e).__name__}: {e}"}
-            detail = None
-            if isinstance(req, dict):
-                detail = req.get("query") or req.get("sql", "")[:120] or None
             server.note(
                 kind,
                 bool(resp.get("ok")),
@@ -824,8 +678,8 @@ class QueryServer(socketserver.ThreadingTCPServer):
     ):
         self.spark = spark
         self.sf_dir = sf_dir
-        # allowlist of dirs the view_report verb may fold (realpath-pinned
-        # at startup, like sf_dir pins the sql verb); None = verb disabled —
+        # allowlist of dirs the view verbs may read (realpath-pinned at
+        # startup, like sf_dir pins the sql verb); None = verbs disabled —
         # an operator decision, never a per-request one
         self.view_roots = (
             [os.path.realpath(r) for r in view_roots] if view_roots else None
@@ -849,15 +703,16 @@ class QueryServer(socketserver.ThreadingTCPServer):
         # requests are rejected IMMEDIATELY with {"ok": false, "busy": true}
         # (fail fast beats queueing: the client can back off or go
         # elsewhere, and a stampede can't build an unbounded backlog of
-        # threads parked on the scheduler). Control verbs (status, cancel,
-        # ping, pipeline_status) bypass the cap — operability must survive
-        # saturation, and cancel is how an operator RELIEVES it.
+        # threads parked on the scheduler). Unguarded verbs bypass the cap
+        # (_VERBS).
         self.max_inflight = max_inflight
         self.max_inflight_per_tenant = max_inflight_per_tenant
         self._t0 = _time.time()
         self._stats_lock = threading.Lock()
         self._audit_lock = threading.Lock()  # file IO only — never nests
         self._takedown_lock = threading.Lock()  # serializes write verbs
+        self._row_scan_lock = threading.Lock()
+        self._row_scan: SparkSession | None = None  # row_scan_session()
         self._served: dict[str, int] = {}
         self._latency: dict[str, deque] = {}  # per-kind, bounded
         self._errors = 0
@@ -869,10 +724,34 @@ class QueryServer(socketserver.ThreadingTCPServer):
         self._pipeline: tuple[Any, str] | None = None
         # the shared SQL views are registered ONCE here, on the pinned sf_dir:
         # tenants all read the same snapshot, and no request path re-registers
-        from streamds_spark.catalog import register_views
-
         register_views(spark, sf_dir)
         super().__init__((host, port), _Handler)
+
+    def in_view_roots(self, path: str) -> bool:
+        real = os.path.realpath(path)
+        return any(
+            real == root or real.startswith(root + os.sep)
+            for root in self.view_roots or ()
+        )
+
+    def row_scan_session(self) -> SparkSession:
+        """A clone of the server's session (same conf as of the first call,
+        same SparkContext, so the same job group and pool) whose table views
+        are registered again with the vectorized Parquet/ORC readers off.
+        A scan reads the conf of the session its view was loaded in, so
+        setting the conf on the clone alone would not reach the pinned
+        views. Built at first use, once per server."""
+        with self._row_scan_lock:
+            if self._row_scan is None:
+                rows = SparkSession(
+                    self.spark.sparkContext,
+                    self.spark._jsparkSession.cloneSession(),  # noqa: SLF001
+                )
+                rows.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
+                rows.conf.set("spark.sql.orc.enableVectorizedReader", "false")
+                register_views(rows, self.sf_dir)
+                self._row_scan = rows
+        return self._row_scan
 
     # -- runaway-query control ---------------------------------------------
     def _cancel_group(self, group: str) -> None:
@@ -883,68 +762,58 @@ class QueryServer(socketserver.ThreadingTCPServer):
         except Exception:  # noqa: BLE001 — older API surface
             sc.cancelJobGroup(group)
 
-    def run_guarded(self, req: dict, pool: str) -> dict:
-        """Run one data-bearing request under its own job group with an
-        optional watchdog deadline. Thread-scoped like the FAIR pool: the
-        group id is attached to every job this thread submits."""
+    def run_guarded(self, handler, req: dict, pool: str) -> dict:
+        """Run `handler` on one data-bearing request under its own job group
+        with an optional watchdog deadline. Thread-scoped like the FAIR
+        pool: the group id is attached to every job this thread submits."""
         timeout_s = req.get("timeout_s", self.timeout_s)
         if timeout_s is not None and not (
             isinstance(timeout_s, (int, float)) and 0 < timeout_s <= MAX_TIMEOUT_S
         ):
-            return {
-                "ok": False,
-                "error": f"timeout_s must be a number in (0, {MAX_TIMEOUT_S}]",
-            }
+            raise _Refused(f"timeout_s must be a number in (0, {MAX_TIMEOUT_S}]")
         tag = req.get("tag")
         if tag is not None and not isinstance(tag, str):
-            return {"ok": False, "error": "tag must be a string"}
+            raise _Refused("tag must be a string")
         # a request may name a scheduler pool (e.g. one configured with a
         # weight/minShare via session.write_allocation_file) instead of the
         # per-connection default — that is how tenants map onto weighted
         # resource shares when the session was built with an allocation file
         pool = req.get("pool", pool)
         if not isinstance(pool, str) or not (0 < len(pool) <= 128):
-            return {"ok": False, "error": "pool must be a non-empty string"}
-        sc = self.spark.sparkContext
+            raise _Refused("pool must be a non-empty string")
+        state = {"timeout": False, "cancelled": False}
         with self._stats_lock:
             # admission control: reject over-capacity work IMMEDIATELY,
             # before any job group or scheduler state exists for it
-            if (
-                self.max_inflight is not None
-                and self._inflight >= self.max_inflight
-            ):
-                self._rejected += 1
-                return {
-                    "ok": False,
-                    "error": f"busy: {self._inflight} requests in flight "
-                    f"(cap {self.max_inflight}) — retry with backoff",
-                    "busy": True,
-                }
-            if (
+            busy = None
+            if self.max_inflight is not None and self._inflight >= self.max_inflight:
+                busy = (
+                    f"busy: {self._inflight} requests in flight "
+                    f"(cap {self.max_inflight}) — retry with backoff"
+                )
+            elif (
                 self.max_inflight_per_tenant is not None
-                and self._inflight_by_tenant.get(pool, 0)
-                >= self.max_inflight_per_tenant
+                and self._inflight_by_tenant.get(pool, 0) >= self.max_inflight_per_tenant
             ):
+                busy = (
+                    f"busy: tenant pool {pool!r} at its in-flight "
+                    f"cap ({self.max_inflight_per_tenant})"
+                )
+            if busy is not None:
                 self._rejected += 1
-                return {
-                    "ok": False,
-                    "error": f"busy: tenant pool {pool!r} at its in-flight "
-                    f"cap ({self.max_inflight_per_tenant})",
-                    "busy": True,
-                }
+                return {"ok": False, "error": busy, "busy": True}
             self._req_n += 1
             # globally unique (uuid): cancelJobGroupAndFutureJobs poisons a
             # group id for the lifetime of the SparkContext, so ids must
             # never be reused across requests OR server instances
             group = f"streamds-req-{self._req_n}-{uuid.uuid4().hex[:8]}"
             self._inflight += 1
-            self._inflight_by_tenant[pool] = (
-                self._inflight_by_tenant.get(pool, 0) + 1
-            )
-        state = {"timeout": False, "cancelled": False}
-        if tag is not None:
-            with self._stats_lock:
+            self._inflight_by_tenant[pool] = self._inflight_by_tenant.get(pool, 0) + 1
+            # registered with the admission: a client that sees the request
+            # in flight (status) can always cancel it by its tag
+            if tag is not None:
                 self._active[tag] = (group, state)
+        sc = self.spark.sparkContext
         timer: threading.Timer | None = None
         sc.setJobGroup(group, f"streamds-server {pool}", interruptOnCancel=True)
         try:
@@ -957,15 +826,9 @@ class QueryServer(socketserver.ThreadingTCPServer):
                 timer = threading.Timer(float(timeout_s), _fire)
                 timer.daemon = True
                 timer.start()
-            return _run_request(
-                self.spark,
-                self.sf_dir,
-                req,
-                pool,
-                self.cache_dir,
-                self.cache_max_bytes,
-                view_roots=self.view_roots,
-            )
+            return handler(self, req, pool)
+        except _Refused:
+            raise
         except Exception as e:  # noqa: BLE001
             if state["timeout"]:
                 return {
@@ -1000,7 +863,7 @@ class QueryServer(socketserver.ThreadingTCPServer):
         reference leader's kill-session verb)."""
         tag = req.get("tag")
         if not isinstance(tag, str):
-            return {"ok": False, "error": "cancel needs 'tag' (string)"}
+            raise _Refused("cancel needs 'tag' (string)")
         with self._stats_lock:
             entry = self._active.get(tag)
         if entry is None:
@@ -1022,13 +885,12 @@ class QueryServer(socketserver.ThreadingTCPServer):
         note(), and a served delete additionally writes the durable
         takedown ledger in the work dir (llm_pipeline._append_takedown_audit)."""
         if not self.allow_writes:
-            return {
-                "ok": False,
-                "error": "read-only server: takedown is a write — start the "
-                "server with allow_writes=True (--allow-writes) to enable it",
-            }
+            raise _Refused(
+                "read-only server: takedown is a write — start the server "
+                "with allow_writes=True (--allow-writes) to enable it"
+            )
         if self._pipeline is None:
-            return {"ok": False, "error": "no pipeline attached to this server"}
+            raise _Refused("no pipeline attached to this server")
         ids = req.get("doc_ids")
         if (
             not isinstance(ids, list)
@@ -1039,17 +901,13 @@ class QueryServer(socketserver.ThreadingTCPServer):
                 isinstance(i, int) and not isinstance(i, bool) for i in ids
             )
         ):
-            return {
-                "ok": False,
-                "error": "takedown needs 'doc_ids': non-empty list of ints",
-            }
+            raise _Refused("takedown needs 'doc_ids': non-empty list of ints")
         if len(ids) > 10_000:
-            return {
-                "ok": False,
-                "error": "takedown caps at 10000 ids per request — batch a "
-                "mass takedown through the library path (delete_docs with a "
-                "DataFrame), not a socket",
-            }
+            raise _Refused(
+                "takedown caps at 10000 ids per request — batch a mass "
+                "takedown through the library path (delete_docs with a "
+                "DataFrame), not a socket"
+            )
         quiesced = bool(req.get("quiesced", False))
         from streamds_spark.streaming.llm_pipeline import delete_docs
 
@@ -1097,7 +955,7 @@ class QueryServer(socketserver.ThreadingTCPServer):
 
     def pipeline_status(self, req: dict | None = None) -> dict:
         if self._pipeline is None:
-            return {"ok": False, "error": "no pipeline attached to this server"}
+            raise _Refused("no pipeline attached to this server")
         from streamds_spark.streaming.llm_pipeline import (
             CorpusStreamPaths,
             _committed_store_dirs,
@@ -1290,36 +1148,11 @@ class QueryServer(socketserver.ThreadingTCPServer):
         }
 
 
-def start_server(
-    spark,
-    sf_dir: str,
-    host: str = "127.0.0.1",
-    port: int = 0,
-    timeout_s: float | None = None,
-    cache_dir: str | None = None,
-    cache_max_bytes: int | None = None,
-    audit_log: str | None = None,
-    max_inflight: int | None = None,
-    max_inflight_per_tenant: int | None = None,
-    allow_writes: bool = False,
-    view_roots: "list[str] | None" = None,
-) -> QueryServer:
-    """Bind + serve in a daemon thread; returns the server (read the bound
-    port from `server.server_address`, stop with `server.shutdown()`)."""
-    server = QueryServer(
-        spark,
-        sf_dir,
-        host=host,
-        port=port,
-        timeout_s=timeout_s,
-        cache_dir=cache_dir,
-        cache_max_bytes=cache_max_bytes,
-        audit_log=audit_log,
-        max_inflight=max_inflight,
-        max_inflight_per_tenant=max_inflight_per_tenant,
-        allow_writes=allow_writes,
-        view_roots=view_roots,
-    )
+def start_server(spark, sf_dir: str, **kw) -> QueryServer:
+    """Bind + serve in a daemon thread; `kw` are QueryServer's options.
+    Returns the server (read the bound port from `server.server_address`,
+    stop with `server.shutdown()`)."""
+    server = QueryServer(spark, sf_dir, **kw)
     t = threading.Thread(target=server.serve_forever, daemon=True, name="streamds-serve")
     t.start()
     return server

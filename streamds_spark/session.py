@@ -87,13 +87,16 @@ def get_spark(
     shuffle_partitions: int | None = None,
     allocation_file: str | None = None,
 ) -> SparkSession:
-    """Return (or create) the session. Idempotent: re-uses an active session
-    (in which case allocation_file cannot be applied — scheduler pools are
-    fixed at SparkContext init). `shuffle_partitions` defaults to the slot
-    count (module docstring)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        return active
+    """Return (or create) the session. Idempotent: re-uses the calling
+    thread's active session, else the default session, as they are — no
+    option below is applied to a live session (builder.getOrCreate would
+    re-apply every one of them, resetting e.g. a width the caller set), and
+    allocation_file cannot be: scheduler pools are fixed at SparkContext
+    init. `shuffle_partitions` defaults to the slot count (module
+    docstring)."""
+    live = SparkSession.getActiveSession() or SparkSession._instantiatedSession  # noqa: SLF001
+    if live is not None and live.sparkContext._jsc is not None:  # noqa: SLF001
+        return live
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{DEFAULT_CPUS}]")

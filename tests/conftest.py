@@ -26,7 +26,7 @@ def pytest_runtest_logreport(report):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", shuffle_partitions=8)
+    s = get_spark("tests")
     yield s
 
 

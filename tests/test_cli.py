@@ -473,6 +473,16 @@ def test_cli_quantiles_verb(spark, capsys):
     assert parts["rank"].split("/")[1] == str(len(scaled))
 
 
+def test_cli_quantiles_refuses_non_numeric_column(spark):
+    """The CLI verb refuses a non-numeric or missing column, as the server
+    verb does (both go through hdr.column_quantiles)."""
+    import pytest
+
+    for column in ("event_type", "no_such_column"):
+        with pytest.raises(SystemExit):
+            _run(["quantiles", "events", column, "/root/testdata/sf0.001"])
+
+
 def test_cli_sample_verb(spark, capsys):
     """`streamds sample`: deterministic bottom-k draw — identical rows on
     repeat runs, stratified mode gives k per stratum, bad args error."""

@@ -221,6 +221,7 @@ def test_eight_client_mixed_soak(spark):
         server.server_close()
 
 
+
 @pytest.mark.slow
 def test_cli_serve_smoke(tmp_path):
     """The CLI verb binds, prints the port, serves one request, and exits
@@ -728,7 +729,7 @@ def test_admission_control_global_cap(spark):
 
         # cancel (a control verb) relieves the saturation...
         for tag in ("slot0", "slot1"):
-            assert request(host, port, {"cmd": "cancel", "tag": tag})["ok"]
+            assert request(host, port, {"cmd": "cancel", "tag": tag})["cancelled"] is True
         for th in occupants:
             th.join(timeout=120)
         assert all(not th.is_alive() for th in occupants)
@@ -784,7 +785,7 @@ def test_admission_control_per_tenant_cap(spark):
         )
         assert other["ok"], other
 
-        assert request(host, port, {"cmd": "cancel", "tag": "hog"})["ok"]
+        assert request(host, port, {"cmd": "cancel", "tag": "hog"})["cancelled"] is True
         th.join(timeout=120)
         assert not th.is_alive()
         # the hog's slot is back and the per-tenant book is clean
@@ -991,6 +992,51 @@ def test_views_listing_verb(spark, tmp_path):
         assert v["rebuild_required"] == 1
         assert v["spec"]["aggs"] == {"s": ["sum", "v"]}
         assert not request(host, port, {"cmd": "views"})["ok"]
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
+def test_malformed_field_gets_error_line_and_connection_survives(spark):
+    """A field of the wrong type is answered with an error line, and the
+    same connection keeps serving: the audit detail of {"sql": 5} must not
+    fail outside the handler's error path."""
+    server, host, port = _start(spark)
+    try:
+        with socket.create_connection((host, port), timeout=60) as s:
+            f = s.makefile("rwb")
+            for req in ({"sql": 5}, {"query": ["x"]}, {"cmd": "nope"}, {"sql": 5},
+                        {"cmd": "ping"}):
+                f.write((json.dumps(req) + "\n").encode())
+                f.flush()
+                resp = json.loads(f.readline())
+                assert resp["ok"] is (req == {"cmd": "ping"}), (req, resp)
+            assert resp["pong"] is True
+        st = request(host, port, {"cmd": "status"})["status"]
+        assert st["served"] == {"invalid": 4, "ping": 1}
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
+def test_kind_precedence_and_bool_limit_refused(spark):
+    """The classified kind is the verb that runs: a `cmd` wins over an `sql`
+    field, and `status` counts the request under the cmd. A `limit` of true
+    is refused on every rows verb (bool is an int subclass)."""
+    server, host, port = _start(spark)
+    try:
+        resp = request(
+            host, port,
+            {"cmd": "quantiles", "table": "nation", "column": "n_nationkey",
+             "qs": {"p50": 0.5}, "sql": "SELECT 1 AS a"},
+        )
+        assert resp["ok"] and set(resp["quantiles"]) == {"p50"}, resp
+        assert "rows" not in resp
+        for req in ({"sql": "SELECT 1 AS a"}, {"query": "distinct_values"}):
+            bad = request(host, port, {**req, "limit": True})
+            assert not bad["ok"] and "limit" in bad["error"], (req, bad)
+        served = request(host, port, {"cmd": "status"})["status"]["served"]
+        assert served == {"quantiles": 1, "sql": 1, "query": 1}
     finally:
         server.shutdown()
         server.server_close()
