@@ -1010,12 +1010,10 @@ def main(argv: list[str] | None = None) -> int:
                     "post-takedown source"
                 )
         elif args.cmd == "view-compact":
-            from streamds_spark.streaming.llm_pipeline import (
-                CorpusStreamPaths,
-                _durable_frontier,
-            )
+            from streamds_spark.io import batchstore
+            from streamds_spark.streaming.llm_pipeline import CorpusStreamPaths
 
-            upto = _durable_frontier(CorpusStreamPaths(args.work))
+            upto = batchstore.durable_frontier(CorpusStreamPaths(args.work).checkpoint)
             folded = vws.compact_view(
                 spark, args.work, upto_batch=upto, num_files=args.num_files
             )

@@ -28,47 +28,22 @@ the dir count exactly like the corpus stores' small-files wall."""
 
 from __future__ import annotations
 
-import glob as _glob
 import json as _json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from streamds_spark.functions.vectors import as_double, cosine, hyperplanes, lsh_bucket_col
+from streamds_spark.io import batchstore
 from streamds_spark.operators.ann import (
     DEFAULT_N_PLANES,
     index_meta_path,
     load_index_meta,
     probe_buckets,
 )
-
-
-def _committed_dirs(path: str) -> list[str]:
-    """Committed data dirs: the highest committed segment (if any) plus every
-    committed batch dir above it — the compaction-aware read set, same shape
-    as llm_pipeline._committed_store_dirs."""
-    seg_hi = -1
-    for d in _glob.glob(os.path.join(path, "segment=*")):
-        try:
-            hi = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        if os.path.exists(os.path.join(d, "_SUCCESS")):
-            seg_hi = max(seg_hi, hi)
-    out = []
-    if seg_hi >= 0:
-        out.append(os.path.join(path, f"segment={seg_hi}"))
-    for d in _glob.glob(os.path.join(path, "batch=*")):
-        try:
-            bid = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        if bid > seg_hi and os.path.exists(os.path.join(d, "_SUCCESS")):
-            out.append(d)
-    return sorted(out)
+from streamds_spark.streaming.engine import parquet_stream, start_batches
 
 
 def ann_index_append(
@@ -106,44 +81,14 @@ def ann_index_append(
         with open(index_meta_path(path), "w") as f:
             _json.dump({"n_planes": n_planes, "dim": dim}, f)
     planes = hyperplanes(n_planes, dim)
-    (
+    batchstore.write(
         emb.withColumn("v", as_double(F.col(vec_col)))
         .withColumn("bucket", lsh_bucket_col(F.col("v"), planes))
-        .drop(vec_col)
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, f"batch={int(batch_id)}"))
+        .drop(vec_col),
+        path,
+        batch_id,
+        partition_by="bucket",
     )
-
-
-def _read_index(spark: SparkSession, dirs: list[str]) -> DataFrame:
-    """ONE scan per dir CLASS (batch=* / segment=*), not one per dir: the
-    class's dirs share the index root as basePath, so batch (resp. segment)
-    and bucket both parse as partition columns, only the LISTED committed
-    dirs are read, and the probe's bucket filter prunes as PartitionFilters.
-    One shared read across BOTH classes is impossible (Spark would see
-    conflicting partition column names batch vs segment), but two scans is
-    the floor — and the per-dir-scan alternative costs a task wave per
-    trigger dir (measured 31 dirs -> 930 tasks, ~19x slower probes)."""
-    nonempty = [
-        d for d in dirs if _glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
-    ]
-    if not nonempty:  # committed-but-empty batches only: no rows anywhere
-        return None
-    groups: dict[str, list[str]] = {}
-    for d in nonempty:
-        cls = os.path.basename(d).split("=", 1)[0]
-        groups.setdefault(cls, []).append(d)
-    parts = []
-    for cls, ds in sorted(groups.items()):
-        base = os.path.dirname(ds[0])
-        parts.append(
-            spark.read.option("basePath", base).parquet(*sorted(ds)).drop(cls)
-        )
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
 
 
 def delete_vectors(
@@ -160,14 +105,10 @@ def delete_vectors(
     fold reclaim immediately."""
     from streamds_spark.io import tombstones
 
-    fold_after = max(
-        (
-            int(os.path.basename(d).split("=", 1)[1])
-            for d in _committed_dirs(path)
-            if os.path.basename(d).startswith("batch=")
-        ),
-        default=-1,
-    ) + (0 if quiesced else 1)
+    latest = batchstore.latest(path)
+    fold_after = (-1 if latest is None else batchstore.parse(latest)[1]) + (
+        0 if quiesced else 1
+    )
     return tombstones.add(
         spark, path, "vec_id", vec_ids, fold_after=fold_after
     )
@@ -195,7 +136,7 @@ def ann_index_probe(
     if len(qvec) != meta["dim"]:
         raise ValueError(f"vector dim {len(qvec)} != index dim {meta['dim']}")
     buckets = probe_buckets(qvec, meta["n_planes"], n_flip_bits)
-    idx_all = _read_index(spark, _committed_dirs(path))
+    idx_all = batchstore.read_partitioned(spark, batchstore.committed(path))
     if idx_all is None:
         return spark.createDataFrame([], "vec_id bigint, label int, cos_sim double")
     q = F.array(*[F.lit(float(x)) for x in qvec])
@@ -211,70 +152,10 @@ def ann_index_probe(
 
 def compact_ann_index(spark: SparkSession, path: str) -> int:
     """Fold every committed batch dir (plus the previous segment) into one
-    new `segment=<hi>` dir, bucket partitioning preserved — the small-files
-    maintenance pass. Crash-safe: the new segment is invisible until its
-    _SUCCESS lands; subsumed dirs are best-effort GC afterwards. Returns the
-    number of batch dirs folded."""
-    return _compact_store(spark, path, "bucket")
-
-
-def _compact_store(spark: SparkSession, path: str, part_col: str) -> int:
-    """Shared batch->segment fold for incremental vector stores; `part_col`
-    is the pruning partition column (hyperplane `bucket` or IVF `list_id`).
-    Tombstoned ids (delete_vectors) are filtered out of the rewrite — the
-    physical takedown — and tombstone dirs the fold fully covers are staged
-    and reclaimed one pass later (io/tombstones.py grace discipline)."""
-    from streamds_spark.io import tombstones
-
-    dirs = _committed_dirs(path)
-    batch_dirs = [d for d in dirs if os.path.basename(d).startswith("batch=")]
-    # reclaim garbage from batches replayed AFTER a previous compaction:
-    # their ids sit at/below the live segment's hi, so readers already skip
-    # them (same GC rule as the corpus stores' _compact_one_store)
-    seg_hi = max(
-        (
-            int(os.path.basename(d).split("=", 1)[1])
-            for d in dirs
-            if os.path.basename(d).startswith("segment=")
-        ),
-        default=-1,
-    )
-    for d in _glob.glob(os.path.join(path, "batch=*")):
-        try:
-            bid = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        if bid <= seg_hi:
-            shutil.rmtree(d, ignore_errors=True)
-    if not batch_dirs:
-        # reclaim tombstones a previous fold staged; stage nothing new (an
-        # un-rewritten store keeps anti-joining its live tombstones)
-        tombstones.gc_then_stage(path, [])
-        return 0
-    tomb_dirs = [d for d, _ in tombstones.committed_dirs(path)]
-    new_hi = max(int(os.path.basename(d).split("=", 1)[1]) for d in batch_dirs)
-    old_segments = [d for d in dirs if os.path.basename(d).startswith("segment=")]
-    folded = _read_index(spark, dirs)
-    if folded is not None:
-        folded = tombstones.apply(folded, path)
-    if folded is None:
-        # only committed-but-empty batches: nothing to materialize — reclaim
-        # the empty dirs (a replay would recreate them, still empty)
-        for d in batch_dirs:
-            shutil.rmtree(d, ignore_errors=True)
-        return len(batch_dirs)
-    (
-        folded.write.mode("overwrite")
-        .partitionBy(part_col)
-        .parquet(os.path.join(path, f"segment={new_hi}"))
-    )
-    for d in batch_dirs + old_segments:
-        shutil.rmtree(d, ignore_errors=True)
-    tombstones.gc_then_stage(
-        path,
-        [d for d in tomb_dirs if d in set(tombstones.eligible_dirs(path, new_hi))],
-    )
-    return len(batch_dirs)
+    new segment, bucket partitioning preserved — the small-files
+    maintenance pass (io/batchstore.compact). Returns the number of batch
+    dirs folded."""
+    return batchstore.compact(spark, path, partition_by="bucket")
 
 
 def run_embedding_index_stream(
@@ -290,17 +171,11 @@ def run_embedding_index_stream(
     """Maintain the index from a parquet embedding stream: readStream ->
     per-batch ann_index_append under the checkpoint's exactly-once replay
     discipline (a redelivered batch rewrites its own dir)."""
-    schema = spark.read.parquet(src_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = reader.parquet(src_dir).writeStream.option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.foreachBatch(
+    return start_batches(
+        parquet_stream(spark, src_dir, max_files_per_trigger),
+        checkpoint,
         lambda df, bid: ann_index_append(
             df, index_path, bid, n_planes=n_planes, vec_col=vec_col
-        )
-    ).start()
+        ),
+        available_now=available_now,
+    )

@@ -33,12 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from streamds_spark.functions.vectors import as_double, cosine
-from streamds_spark.operators.ann_incremental import (
-    _apply_tombstones,
-    _committed_dirs,
-    _compact_store,
-    _read_index,
-)
+from streamds_spark.io import batchstore
+from streamds_spark.operators.ann_incremental import _apply_tombstones
 from streamds_spark.operators.ivf import nearest_lists
 from streamds_spark.operators.kmeans import _assign, kmeans
 
@@ -131,11 +127,11 @@ def ivf_index_append(
                 },
                 f,
             )
-    (
-        assign_lists(emb, centroids, id_col=id_col, vec_col=vec_col)
-        .write.mode("overwrite")
-        .partitionBy("list_id")
-        .parquet(os.path.join(path, f"batch={int(batch_id)}"))
+    batchstore.write(
+        assign_lists(emb, centroids, id_col=id_col, vec_col=vec_col),
+        path,
+        batch_id,
+        partition_by="list_id",
     )
 
 
@@ -154,7 +150,7 @@ def ivf_index_probe(
     if len(qvec) != meta["dim"]:
         raise ValueError(f"vector dim {len(qvec)} != index dim {meta['dim']}")
     lists = nearest_lists(qvec, meta["centroids"], n_probe)
-    idx_all = _read_index(spark, _committed_dirs(path))
+    idx_all = batchstore.read_partitioned(spark, batchstore.committed(path))
     if idx_all is None:
         return spark.createDataFrame([], "vec_id bigint, label int, cos_sim double")
     q = F.array(*[F.lit(float(x)) for x in qvec])
@@ -171,7 +167,7 @@ def ivf_index_probe(
 def compact_ivf_index(spark: SparkSession, path: str) -> int:
     """Fold committed batch dirs (plus the previous segment) into one new
     segment, list_id partitioning preserved; returns batch dirs folded."""
-    return _compact_store(spark, path, "list_id")
+    return batchstore.compact(spark, path, partition_by="list_id")
 
 
 def ivf_index_rebuild(
@@ -188,7 +184,7 @@ def ivf_index_rebuild(
     untouched (cut probes over atomically by swapping the path the caller
     uses — the same pointer discipline as the appendlog generations).
     Returns the number of vectors re-indexed."""
-    idx = _read_index(spark, _committed_dirs(old_path))
+    idx = batchstore.read_partitioned(spark, batchstore.committed(old_path))
     if idx is None:
         raise ValueError(f"nothing committed to rebuild at {old_path!r}")
     # takedown: a rebuild must not resurrect tombstoned vectors — the fresh

@@ -956,11 +956,8 @@ class QueryServer(socketserver.ThreadingTCPServer):
     def pipeline_status(self, req: dict | None = None) -> dict:
         if self._pipeline is None:
             raise _Refused("no pipeline attached to this server")
-        from streamds_spark.streaming.llm_pipeline import (
-            CorpusStreamPaths,
-            _committed_store_dirs,
-            _durable_frontier,
-        )
+        from streamds_spark.io import batchstore
+        from streamds_spark.streaming.llm_pipeline import CorpusStreamPaths
         from streamds_spark.streaming.metrics import throughput_report
 
         capture, work_dir = self._pipeline
@@ -970,24 +967,13 @@ class QueryServer(socketserver.ThreadingTCPServer):
             for qid in capture.query_ids()
         }
         stores = {
-            name: len(_committed_store_dirs(getattr(paths, name), 2**62))
-            for name in (
-                "hash_store",
-                "bucket_store",
-                "chunk_store",
-                "hll_store",
-                "hdr_store",
-                "sample_store",
-                "wsample_store",
-                "mg_store",
-                "dq_store",
-                "ams_store",
-            )
+            name: len(batchstore.committed(getattr(paths, name)))
+            for name in CorpusStreamPaths.STORES
         }
         out = {
             "work_dir": work_dir,
             "queries": queries,
-            "durable_frontier": _durable_frontier(paths),
+            "durable_frontier": batchstore.durable_frontier(paths.checkpoint),
             "committed_store_dirs": stores,
             "terminated": dict(capture.terminated),
         }

@@ -45,6 +45,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from streamds_spark.io import batchstore
+from streamds_spark.streaming.engine import parquet_stream, start_batches
+
 TOUCH_TYPES = ("click", "view", "signup")
 CONV_TYPE = "purchase"
 WINDOW_US = 7 * 24 * 3600 * 1_000_000  # the 7-day attribution horizon
@@ -159,23 +162,14 @@ def run_attribution_stream(
     deltas land in `work_dir/credits/batch=N` (overwrite-idempotent), state
     checkpoint in `work_dir/checkpoint` — stop/restart resumes the touch
     state where it left off."""
-    schema = spark.read.parquet(src_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    deltas = attribution_stream(reader.parquet(src_dir))
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(work_dir, "credits", f"batch={int(batch_id)}")
-        )
-
-    writer = deltas.writeStream.option(
-        "checkpointLocation", os.path.join(work_dir, "checkpoint")
+    credits = os.path.join(work_dir, "credits")
+    return start_batches(
+        attribution_stream(parquet_stream(spark, src_dir, max_files_per_trigger)),
+        os.path.join(work_dir, "checkpoint"),
+        lambda batch_df, batch_id: batchstore.write(batch_df, credits, batch_id),
+        output_mode="append",
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.outputMode("append").foreachBatch(_sink).start()
 
 
 def attribution_report(spark: SparkSession, work_dir: str) -> DataFrame:
@@ -183,9 +177,7 @@ def attribution_report(spark: SparkSession, work_dir: str) -> DataFrame:
     committed per-batch credit rows per touch type — the SAME columns as the
     batch `attribution_multi_touch` query, so after an in-order drain the
     two are row-identical (pinned by tests/test_attribution_stream.py)."""
-    from streamds_spark.streaming.llm_pipeline import _committed_store_dirs
-
-    dirs = _committed_store_dirs(os.path.join(work_dir, "credits"), 2**62)
+    dirs = batchstore.committed(os.path.join(work_dir, "credits"))
     if not dirs:
         return spark.createDataFrame(
             [],

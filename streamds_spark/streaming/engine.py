@@ -25,13 +25,13 @@ windowed_counts(watermark=...).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from streamds_spark.io import batchstore
 from streamds_spark.operators.rainstorm import STAGE1_OPS, STAGE2_OPS, RainStormJob
 
 
@@ -61,15 +61,11 @@ def compile_rainstorm_stream(
 
 
 def foreach_batch_parquet(dest: str) -> Callable[[DataFrame, int], None]:
-    """Idempotent sink: each micro-batch (over)writes its own batchId-keyed dir,
-    so a replayed batch lands in the same place — the exactly-once story the
-    reference built from acks + seen-maps (ST2/ST3). Readers take the latest
-    state via `read_latest_batch`."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(os.path.join(dest, f"batch={batch_id}"))
-
-    return write
+    """Idempotent sink: each micro-batch (over)writes its own batch store dir
+    (io/batchstore.py), so a replayed batch lands in the same place — the
+    exactly-once story the reference built from acks + seen-maps (ST2/ST3).
+    Readers take the latest state via `read_latest_batch`."""
+    return lambda batch_df, batch_id: batchstore.write(batch_df, dest, batch_id)
 
 
 def foreach_batch_appendlog(dest: str, client_id: str) -> Callable[[DataFrame, int], None]:
@@ -89,22 +85,44 @@ def foreach_batch_appendlog(dest: str, client_id: str) -> Callable[[DataFrame, i
 
 
 def read_latest_batch(spark: SparkSession, dest: str) -> DataFrame:
-    """Read the newest COMMITTED batch dir — the 'last buffer per task wins'
-    semantics of the reference's quantify (S8) without its merge dance.
-
-    Only dirs with a _SUCCESS marker count: a writer killed mid-batch leaves a
-    partial dir behind, and the idempotent re-run will overwrite it — readers
-    must never observe it (the torn-write case the reference handled with its
-    BUFFER START/END framing)."""
-    committed = [
-        d
-        for d in os.listdir(dest)
-        if d.startswith("batch=") and os.path.exists(os.path.join(dest, d, "_SUCCESS"))
-    ]
-    if not committed:
+    """Read the newest COMMITTED batch store dir — the 'last buffer per task
+    wins' semantics of the reference's quantify (S8) without its merge dance.
+    A writer killed mid-batch leaves a torn dir that readers never observe
+    (the torn-write case the reference handled with BUFFER START/END)."""
+    latest = batchstore.latest(dest)
+    if latest is None:
         raise FileNotFoundError(f"no committed batch dirs under {dest}")
-    latest = max(committed, key=lambda d: int(d.split("=")[1]))
-    return spark.read.parquet(os.path.join(dest, latest))
+    return spark.read.parquet(latest)
+
+
+def parquet_stream(
+    spark: SparkSession, src_dir: str, max_files_per_trigger: int | None
+) -> DataFrame:
+    """Stream a parquet dir with the schema of the files already there;
+    files-per-trigger is the count-based batch knob (ST1)."""
+    reader = spark.readStream.schema(spark.read.parquet(src_dir).schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(src_dir)
+
+
+def start_batches(
+    df: DataFrame,
+    checkpoint: str,
+    sink: Callable[[DataFrame, int], None],
+    *,
+    output_mode: str | None = None,
+    available_now: bool = True,
+) -> StreamingQuery:
+    """Start `df` into a foreachBatch sink under `checkpoint`.
+    available_now=True drains all current input and stops (the *COMPLETED*
+    sentinel protocol, ST5); False keeps tailing the source."""
+    writer = df.writeStream.option("checkpointLocation", checkpoint)
+    if output_mode is not None:
+        writer = writer.outputMode(output_mode)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.foreachBatch(sink).start()
 
 
 def run_rainstorm_stream(
@@ -116,19 +134,20 @@ def run_rainstorm_stream(
     available_now: bool = True,
     max_files_per_trigger: int | None = 1,
 ) -> StreamingQuery:
-    """Launch the streaming job. available_now=True drains all current input and
-    stops (the *COMPLETED* sentinel protocol, ST5); False keeps tailing the dir."""
-    result = compile_rainstorm_stream(spark, job, max_files_per_trigger)
-    writer = result.writeStream.outputMode(output_mode).option(
-        "checkpointLocation", checkpoint_dir
+    """Launch the streaming job into `dest_dir`'s batch store, or print
+    each batch when dest_dir is None."""
+
+    def console(batch_df: DataFrame, batch_id: int) -> None:
+        print(f"Batch: {batch_id}")
+        batch_df.show()
+
+    return start_batches(
+        compile_rainstorm_stream(spark, job, max_files_per_trigger),
+        checkpoint_dir,
+        console if dest_dir is None else foreach_batch_parquet(dest_dir),
+        output_mode=output_mode,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    if dest_dir is not None:
-        q = writer.foreachBatch(foreach_batch_parquet(dest_dir)).start()
-    else:
-        q = writer.format("console").start()
-    return q
 
 
 def windowed_counts(
@@ -274,38 +293,3 @@ def streaming_dedup(
         keys
     )
 
-
-def stream_kafka_source(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-) -> DataFrame:
-    """Kafka streaming source → the engine's (key, value) line model.
-
-    Requires the spark-sql-kafka connector on the classpath (not bundled in
-    this build environment — the wrapper raises a clear error if absent).
-    maxOffsetsPerTrigger is the Kafka twin of the file source's
-    maxFilesPerTrigger rate control (ST1).
-    """
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-    )
-    if max_offsets_per_trigger is not None:
-        reader = reader.option("maxOffsetsPerTrigger", max_offsets_per_trigger)
-    try:
-        raw = reader.load()
-    except Exception as e:  # pragma: no cover - environment-dependent
-        raise RuntimeError(
-            "Kafka source requires the spark-sql-kafka connector "
-            "(--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>); "
-            f"underlying error: {e}"
-        ) from e
-    return raw.select(
-        F.col("key").cast("string").alias("key"),
-        F.col("value").cast("string").alias("value"),
-    )

@@ -32,6 +32,9 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructField, StructType
 
+from streamds_spark.io import batchstore
+from streamds_spark.streaming.engine import parquet_stream, start_batches
+
 FUNNEL_OUTPUT = StructType(
     [
         StructField("user_id", LongType()),
@@ -106,23 +109,20 @@ def run_funnel_stream(
     snapshots land in `work_dir/stages/batch=N` (overwrite-idempotent), the
     state checkpoint in `work_dir/checkpoint` — stop/restart resumes the
     state machine where it left off."""
-    schema = spark.read.parquet(src_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    snaps = funnel_stage_stream(reader.parquet(src_dir))
-
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(work_dir, "stages", f"batch={int(batch_id)}"))
+        batchstore.write(
+            batch_df.withColumn("batch", F.lit(int(batch_id))),
+            os.path.join(work_dir, "stages"),
+            batch_id,
+        )
 
-    writer = snaps.writeStream.option(
-        "checkpointLocation", os.path.join(work_dir, "checkpoint")
+    return start_batches(
+        funnel_stage_stream(parquet_stream(spark, src_dir, max_files_per_trigger)),
+        os.path.join(work_dir, "checkpoint"),
+        _sink,
+        output_mode="update",
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.outputMode("update").foreachBatch(_sink).start()
 
 
 def funnel_state_report(spark: SparkSession, work_dir: str) -> DataFrame:
@@ -134,9 +134,7 @@ def funnel_state_report(spark: SparkSession, work_dir: str) -> DataFrame:
 
     Plan: committed batch dirs only (torn/replaying dirs invisible), one
     user-keyed max_by, 1-row census arithmetic."""
-    from streamds_spark.streaming.llm_pipeline import _committed_store_dirs
-
-    dirs = _committed_store_dirs(os.path.join(work_dir, "stages"), 2**62)
+    dirs = batchstore.committed(os.path.join(work_dir, "stages"))
     if not dirs:
         return spark.createDataFrame(
             [],

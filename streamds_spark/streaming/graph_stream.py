@@ -39,10 +39,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from streamds_spark.streaming.llm_pipeline import (
-    _committed_store_dirs,
-    _compact_one_store,
-)
+from streamds_spark.io import batchstore
+from streamds_spark.streaming.engine import parquet_stream, start_batches
 
 
 class EdgeStreamPaths:
@@ -65,7 +63,7 @@ class EdgeStreamPaths:
 def _known_edges(
     spark: SparkSession, paths: EdgeStreamPaths, batch_id: int
 ) -> "DataFrame | None":
-    dirs = _committed_store_dirs(paths.edge_store, int(batch_id))
+    dirs = batchstore.committed(paths.edge_store, int(batch_id))
     if not dirs:
         return None
     return spark.read.parquet(*dirs).select("u", "v")
@@ -112,14 +110,14 @@ def process_edge_batch(
                 continue
             delta += _tri_count(*(sides[r] for r in roles))
 
-    new.write.mode("overwrite").parquet(
-        os.path.join(paths.edge_store, f"batch={int(batch_id)}")
-    )
-    spark.createDataFrame(
-        [(int(batch_id), n_new, delta)],
-        "batch_id bigint, n_new_edges bigint, delta_triangles bigint",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(paths.census_store, f"batch={int(batch_id)}")
+    batchstore.write(new, paths.edge_store, batch_id)
+    batchstore.write(
+        spark.createDataFrame(
+            [(int(batch_id), n_new, delta)],
+            "batch_id bigint, n_new_edges bigint, delta_triangles bigint",
+        ).coalesce(1),
+        paths.census_store,
+        batch_id,
     )
 
 
@@ -133,19 +131,12 @@ def run_edge_stream(
     """Tail a parquet dir of (u, v) edge rows into the edge store with
     per-trigger incremental triangle maintenance."""
     paths = EdgeStreamPaths(work_dir)
-    schema = spark.read.parquet(src_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (
-        reader.parquet(src_dir)
-        .writeStream.option("checkpointLocation", paths.checkpoint)
+    return start_batches(
+        parquet_stream(spark, src_dir, max_files_per_trigger),
+        paths.checkpoint,
+        lambda df, bid: process_edge_batch(df, bid, paths),
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.foreachBatch(
-        lambda df, bid: process_edge_batch(df, bid, paths)
-    ).start()
 
 
 def graph_census(spark: SparkSession, work_dir: str) -> DataFrame:
@@ -154,9 +145,8 @@ def graph_census(spark: SparkSession, work_dir: str) -> DataFrame:
     equal to queries/graph.triangle_count over the union of all committed
     edges."""
     paths = EdgeStreamPaths(work_dir)
-    dirs = _committed_store_dirs(paths.census_store, 1 << 62)
-    edge_dirs = _committed_store_dirs(paths.edge_store, 1 << 62)
-    if not dirs or not edge_dirs:
+    dirs = batchstore.committed(paths.census_store)
+    if not dirs or not batchstore.committed(paths.edge_store):
         return spark.createDataFrame(
             [(0, 0)], "n_edges bigint, n_triangles bigint"
         )
@@ -175,4 +165,4 @@ def compact_edge_store(spark: SparkSession, work_dir: str, upto_batch: int) -> N
     union."""
     paths = EdgeStreamPaths(work_dir)
     for root in (paths.edge_store, paths.census_store):
-        _compact_one_store(spark, root, int(upto_batch), None)
+        batchstore.compact(spark, root, int(upto_batch))

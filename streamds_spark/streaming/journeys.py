@@ -42,11 +42,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from streamds_spark.io import batchstore
 from streamds_spark.queries.advanced import (
     JOURNEY_LEN,
     JOURNEY_TOPK,
     SESSION_GAP_MIN,
 )
+from streamds_spark.streaming.engine import parquet_stream, start_batches
 
 GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
 
@@ -124,23 +126,20 @@ def run_journeys_stream(
     """Mine journeys continuously over a parquet events dir: per-trigger
     rows land in `work_dir/journeys/batch=N` (overwrite-idempotent), state
     checkpoint in `work_dir/checkpoint`."""
-    schema = spark.read.parquet(src_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    rows = journeys_stream(reader.parquet(src_dir))
-
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(work_dir, "journeys", f"batch={int(batch_id)}"))
+        batchstore.write(
+            batch_df.withColumn("batch", F.lit(int(batch_id))),
+            os.path.join(work_dir, "journeys"),
+            batch_id,
+        )
 
-    writer = rows.writeStream.option(
-        "checkpointLocation", os.path.join(work_dir, "checkpoint")
+    return start_batches(
+        journeys_stream(parquet_stream(spark, src_dir, max_files_per_trigger)),
+        os.path.join(work_dir, "checkpoint"),
+        _sink,
+        output_mode="update",
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.outputMode("update").foreachBatch(_sink).start()
 
 
 def journeys_report(
@@ -151,9 +150,7 @@ def journeys_report(
     journey — the SAME columns and top-k rule as the batch
     `top_user_journeys` query, so after an in-order drain the two are
     row-identical (pinned by tests/test_journeys_stream.py)."""
-    from streamds_spark.streaming.llm_pipeline import _committed_store_dirs
-
-    dirs = _committed_store_dirs(os.path.join(work_dir, "journeys"), 2**62)
+    dirs = batchstore.committed(os.path.join(work_dir, "journeys"))
     if not dirs:
         return spark.createDataFrame([], "journey string, n_sessions bigint")
     rows = spark.read.parquet(*dirs)

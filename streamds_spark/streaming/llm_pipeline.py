@@ -45,7 +45,6 @@ the corpus — the same measured posture as dedup_incremental (BASELINE.md).
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 import shutil
 from dataclasses import dataclass
@@ -54,8 +53,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from streamds_spark.io import appendlog
+from streamds_spark.io import appendlog, batchstore
 from streamds_spark.operators.dedup_pipeline import lsh_band_buckets, minhash_signatures
+from streamds_spark.streaming.engine import parquet_stream, start_batches
 
 SAMPLE_K = 100  # rows kept in the mergeable bottom-k corpus sample
 WEIGHTED_SAMPLE_K = 100  # rows kept in the mergeable ES-key weighted sample
@@ -95,6 +95,19 @@ class CorpusStreamPaths:
     """Directory layout under one work dir: everything batch-keyed."""
 
     work_dir: str
+    # the batch stores (io/batchstore.py), in compaction order
+    STORES = (
+        "hash_store",
+        "bucket_store",
+        "chunk_store",
+        "hll_store",
+        "hdr_store",
+        "sample_store",
+        "wsample_store",
+        "mg_store",
+        "dq_store",
+        "ams_store",
+    )
 
     @property
     def checkpoint(self) -> str:
@@ -145,52 +158,10 @@ class CorpusStreamPaths:
         return os.path.join(self.work_dir, "ams_store")
 
 
-def _committed_segment_hi(root: str, before_batch: int) -> int:
-    """Highest committed compaction segment usable by a probe running batch
-    `before_batch` (segments cover the batch-id prefix 0..hi inclusive).
-    Compaction only folds batches at or below the checkpoint's durable
-    frontier, and replays only re-run batches ABOVE that frontier, so a
-    segment with hi >= before_batch cannot occur in a live stream — the
-    filter is defensive for out-of-band callers."""
-    best = -1
-    for d in _glob.glob(os.path.join(root, "segment=*")):
-        try:
-            hi = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        if hi < before_batch and os.path.exists(os.path.join(d, "_SUCCESS")):
-            best = max(best, hi)
-    return best
-
-
-def _committed_store_dirs(root: str, before_batch: int) -> list[str]:
-    """Store dirs from batches strictly BEFORE the given one (committed only).
-    Replay safety: a re-run batch must not probe its own prior half-write.
-
-    Compaction-aware: if a committed `segment=<hi>` exists (the prefix
-    0..hi bin-packed into one dir by compact_stores), it replaces every
-    batch dir with id <= hi — including any dir a post-compaction replay
-    rewrote, which is what makes replayed batches no-ops after compaction."""
-    seg_hi = _committed_segment_hi(root, before_batch)
-    out = []
-    if seg_hi >= 0:
-        out.append(os.path.join(root, f"segment={seg_hi}"))
-    for d in _glob.glob(os.path.join(root, "batch=*")):
-        try:
-            bid = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        if seg_hi < bid < before_batch and os.path.exists(
-            os.path.join(d, "_SUCCESS")
-        ):
-            out.append(d)
-    return sorted(out)
-
-
 def _seen_hashes(spark: SparkSession, paths: CorpusStreamPaths, batch_id: int) -> DataFrame | None:
     from streamds_spark.io import tombstones
 
-    dirs = _committed_store_dirs(paths.hash_store, batch_id)
+    dirs = batchstore.committed(paths.hash_store, batch_id)
     if not dirs:
         return None
     # takedown: a deleted doc's content hash is tombstoned (delete_docs), so
@@ -202,123 +173,11 @@ def _seen_hashes(spark: SparkSession, paths: CorpusStreamPaths, batch_id: int) -
 def _corpus_buckets(spark: SparkSession, paths: CorpusStreamPaths, batch_id: int) -> DataFrame | None:
     from streamds_spark.io import tombstones
 
-    dirs = _committed_store_dirs(paths.bucket_store, batch_id)
+    dirs = batchstore.committed(paths.bucket_store, batch_id)
     if not dirs:
         return None
     # takedown: a deleted doc must stop being a near-dup candidate
     return tombstones.apply(spark.read.parquet(*dirs), paths.bucket_store)
-
-
-def _durable_frontier(paths: CorpusStreamPaths) -> int:
-    """Highest batch id the stream's checkpoint has COMMITTED (the
-    `checkpoint/commits/<id>` marker is written after foreachBatch returns).
-    Batches at or below this id can never be replayed, so they are safe to
-    fold into a compaction segment; -1 means nothing committed yet."""
-    commits = os.path.join(paths.checkpoint, "commits")
-    best = -1
-    if os.path.isdir(commits):
-        for name in os.listdir(commits):
-            if name.isdigit():
-                best = max(best, int(name))
-    return best
-
-
-def _compact_one_store(
-    spark: SparkSession, root: str, upto_batch: int, num_files: int | None
-) -> int:
-    """Fold committed `batch=N` dirs (N <= upto_batch) plus the previous
-    segment into one new `segment=<hi>` dir. Crash-safe by construction:
-    the new segment is invisible until its _SUCCESS lands (readers keep
-    using the old segment + batch dirs), and GC of subsumed dirs is
-    best-effort afterwards — a crash anywhere leaves a consistent view.
-    Returns the number of batch dirs folded (0 = nothing to do).
-
-    Tombstone folding: the rewrite filters out every committed tombstone's
-    keys (io/tombstones.py — written by delete_docs), which is where the
-    deleted bytes physically disappear; tombstone dirs whose replay
-    frontier the fold covers are staged and reclaimed one pass later. A
-    fully-quiesced store (no batch dirs to fold) keeps its tombstones live
-    — readers anti-join them, so the rows stay invisible; the physical
-    fold happens with the next batch fold (or rebuild_sketch_stores for
-    the register stores, which cannot subtract)."""
-    from streamds_spark.io import tombstones
-
-    old_hi = _committed_segment_hi(root, upto_batch + 1)
-    for d in _glob.glob(os.path.join(root, "batch=*")):
-        try:
-            bid = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        if bid <= old_hi:
-            # garbage from a batch replayed after a previous compaction —
-            # readers already skip it (bid <= segment hi); reclaim it
-            shutil.rmtree(d, ignore_errors=True)
-    # _fold_parts is the SINGLE source of truth for the fold set — the
-    # sample-erosion accounting (_compact_sample_store) counts suppressed
-    # rows over the same call, so the two can never silently diverge.
-    parts = _fold_parts(root, upto_batch)
-    to_fold = [
-        d for d in parts if os.path.basename(d).startswith("batch=")
-    ]
-    if not to_fold:
-        # still reclaim tombstones a PREVIOUS fold staged (their keys are
-        # already physically gone from the segment); stage nothing new —
-        # an un-rewritten store must keep anti-joining its live tombstones
-        tombstones.gc_then_stage(root, [])
-        return 0
-    tomb_dirs = [d for d, _ in tombstones.committed_dirs(root)]
-    new_hi = max(
-        int(os.path.basename(d).split("=", 1)[1]) for d in to_fold
-    )
-    # mergeSchema: the pipeline stores are schema-uniform (no-op beyond a
-    # few extra footer reads), but the viewstore delegates here and a MIXED
-    # legacy/new view store must not let footer sampling strip the __rows
-    # presence column from new partials during the rewrite — that loss
-    # would be permanent (view_report reads the segment forever after)
-    df = tombstones.apply(
-        spark.read.option("mergeSchema", "true").parquet(*parts), root
-    )
-    if num_files is not None:
-        df = df.coalesce(max(1, num_files))
-    df.write.mode("overwrite").parquet(os.path.join(root, f"segment={new_hi}"))
-    # _SUCCESS is the commit point; everything below is reclaim
-    for d in to_fold:
-        shutil.rmtree(d, ignore_errors=True)
-    if old_hi >= 0:
-        shutil.rmtree(os.path.join(root, f"segment={old_hi}"), ignore_errors=True)
-    folded = [
-        d
-        for d in tomb_dirs
-        if d in set(tombstones.eligible_dirs(root, upto_batch))
-    ]
-    tombstones.gc_then_stage(root, folded)
-    return len(to_fold)
-
-
-def _fold_parts(root: str, upto_batch: int) -> list[str]:
-    """The parquet dirs a `_compact_one_store(root, upto_batch)` pass will
-    fold: committed batch dirs in (segment_hi, upto_batch] plus the previous
-    segment. _compact_one_store CALLS this for its own dir selection (single
-    source of truth). Shared with the sample-erosion accounting so erosion counts EXACTLY the tombstoned
-    rows THIS fold physically removes (counting over all committed dirs
-    double-counted keys living in not-yet-folded batches: they stayed
-    suppressed-live AND bumped erosion, then bumped again when their dir
-    finally folded — ratcheting the exactness guard shut on k values that
-    were actually fine)."""
-    old_hi = _committed_segment_hi(root, upto_batch + 1)
-    parts = []
-    for d in _glob.glob(os.path.join(root, "batch=*")):
-        try:
-            bid = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        if old_hi < bid <= upto_batch and os.path.exists(
-            os.path.join(d, "_SUCCESS")
-        ):
-            parts.append(d)
-    if parts and old_hi >= 0:
-        parts.append(os.path.join(root, f"segment={old_hi}"))
-    return parts
 
 
 def _compact_sample_store(
@@ -334,10 +193,10 @@ def _compact_sample_store(
     from streamds_spark.io import tombstones as _tomb
 
     pending = 0
-    parts = _fold_parts(root, upto_batch)
+    parts = batchstore.fold_parts(root, upto_batch)
     if parts and _tomb.committed_dirs(root):
         pending = _tomb.suppressed_count(spark, root, spark.read.parquet(*parts))
-    folded = _compact_one_store(spark, root, upto_batch, num_files)
+    folded = batchstore.compact(spark, root, upto_batch, num_files=num_files)
     if pending and folded > 0:
         _bump_sample_erosion(root, pending)
     return folded
@@ -358,94 +217,33 @@ def compact_stores(
     becomes the bottleneck (the small-files wall — the reference hits the
     same wall and answers with HyDFS merge, core_process_utils.go:2040-2146).
     This folds every batch dir at or below the checkpoint's durable frontier
-    (or an explicit `upto_batch`) into one `segment=<hi>` dir per store and
-    runs appendlog.merge on the corpus. Probe results are identical before
-    and after, and a batch replayed AFTER compaction is a no-op: its
-    rewritten dirs fall at or below the segment's hi / inside the merge
-    manifest's dir entries, so no reader ever sees them
-    (tests/test_llm_pipeline_stream.py pins both properties)."""
+    (or an explicit `upto_batch`) into one segment per store
+    (io/batchstore.compact) and runs appendlog.merge on the corpus. Probe
+    results are identical before and after, and a batch replayed AFTER
+    compaction is a no-op: its rewritten dirs fall at or below the segment's
+    hi / inside the merge manifest's dir entries, so no reader ever sees
+    them (tests/test_llm_pipeline_stream.py pins both properties).
+
+    The row-preserving fold is exact for every sketch store because each
+    reader re-aggregates what it reads: HLL registers by max, HDR/MG/DQ/AMS
+    rows by SUM (MG's NULL-term sentinel rows carry the error budget along),
+    bottom-k/weighted samples by re-taking the k extreme keys. The two sample
+    stores also keep takedown-erosion accounting (_compact_sample_store).
+    The DQ and AMS stores are ingest journals: never tombstoned."""
     paths = CorpusStreamPaths(work_dir)
     if upto_batch is None:
-        upto_batch = _durable_frontier(paths)
-    stats = {
-        "upto_batch": upto_batch,
-        "hash_store": 0,
-        "bucket_store": 0,
-        "chunk_store": 0,
-        "hll_store": 0,
-        "hdr_store": 0,
-        "sample_store": 0,
-        "wsample_store": 0,
-        "mg_store": 0,
-        "dq_store": 0,
-        "ams_store": 0,
-    }
+        upto_batch = batchstore.durable_frontier(paths.checkpoint)
+    stats = {"upto_batch": upto_batch, **dict.fromkeys(CorpusStreamPaths.STORES, 0)}
     if upto_batch < 0:
         return stats
-    stats["hash_store"] = _compact_one_store(
-        spark, paths.hash_store, upto_batch, num_files
-    )
-    stats["bucket_store"] = _compact_one_store(
-        spark, paths.bucket_store, upto_batch, num_files
-    )
-    if os.path.isdir(paths.chunk_store):
-        stats["chunk_store"] = _compact_one_store(
-            spark, paths.chunk_store, upto_batch, num_files
-        )
-    if os.path.isdir(paths.hll_store):
-        # register tables union-fold like any store: duplicate (bucket, rho)
-        # rows are a valid un-merged sketch, and every reader re-aggregates
-        # by max(bucket) — so the generic fold preserves the estimate
-        stats["hll_store"] = _compact_one_store(
-            spark, paths.hll_store, upto_batch, num_files
-        )
-    if os.path.isdir(paths.hdr_store):
-        # HDR registers fold the same way: duplicate (bucket, cnt) rows are a
-        # valid un-merged sketch because readers re-aggregate by SUM, and the
-        # fold preserves rows — only dir/file count changes, never counts
-        stats["hdr_store"] = _compact_one_store(
-            spark, paths.hdr_store, upto_batch, num_files
-        )
-    if os.path.isdir(paths.sample_store):
-        # bottom-k samples fold the same way: the union of per-batch k-row
-        # samples is a valid un-folded sample state (readers re-take the k
-        # smallest), so the generic fold preserves the sample exactly.
-        # Erosion accounting shared with the weighted store below — see
-        # _compact_sample_store.
-        stats["sample_store"] = _compact_sample_store(
-            spark, paths.sample_store, upto_batch, num_files
-        )
-    if os.path.isdir(paths.wsample_store):
-        # the weighted sample folds and erodes exactly like the uniform one
-        stats["wsample_store"] = _compact_sample_store(
-            spark, paths.wsample_store, upto_batch, num_files
-        )
-    if os.path.isdir(paths.mg_store):
-        # MG summaries fold like the register tables: duplicate (term, cnt)
-        # rows are a valid un-merged state (readers re-aggregate by SUM),
-        # and the NULL-term sentinel rows travel with the data, so the
-        # folded store still knows its exact error budget
-        stats["mg_store"] = _compact_one_store(
-            spark, paths.mg_store, upto_batch, num_files
-        )
-    if os.path.isdir(paths.dq_store):
-        # per-trigger constraint reports fold like the HDR registers:
-        # duplicate (check_name, target) rows are a valid un-folded state —
-        # corpus_dq_report re-aggregates n_rows/violations by SUM, so the
-        # row-preserving fold never changes the served report. Never
-        # tombstoned: the DQ store is an ingest JOURNAL (what arrived),
-        # and takedowns do not rewrite arrival history.
-        stats["dq_store"] = _compact_one_store(
-            spark, paths.dq_store, upto_batch, num_files
-        )
-    if os.path.isdir(paths.ams_store):
-        # AMS counters fold like the HDR registers: duplicate (j, c) rows
-        # are a valid un-folded state — readers re-aggregate by SUM per j
-        # (linear state), so the row-preserving fold never changes the
-        # estimate. An ingest journal like dq_store: never tombstoned.
-        stats["ams_store"] = _compact_one_store(
-            spark, paths.ams_store, upto_batch, num_files
-        )
+    for name in CorpusStreamPaths.STORES:
+        root = getattr(paths, name)
+        if name in ("sample_store", "wsample_store"):
+            stats[name] = _compact_sample_store(spark, root, upto_batch, num_files)
+        else:
+            stats[name] = batchstore.compact(
+                spark, root, upto_batch, num_files=num_files
+            )
     if merge_corpus:
         # tombstone_upto carries the fold's replay frontier into the corpus
         # log's tombstone GC — a delete issued mid-stream is only reclaimed
@@ -546,12 +344,10 @@ def process_corpus_batch(
         # operational loop: register -> auto-maintained per trigger ->
         # takedown-cascaded -> rebuild/compact.
         _maintain_registered_views(spark, paths.work_dir, kept_rows, batch_id)
-        local.select(F.col("_h").alias("h")).distinct().write.mode("overwrite").parquet(
-            os.path.join(paths.hash_store, f"batch={int(batch_id)}")
+        batchstore.write(
+            local.select(F.col("_h").alias("h")).distinct(), paths.hash_store, batch_id
         )
-        new_buckets.write.mode("overwrite").parquet(
-            os.path.join(paths.bucket_store, f"batch={int(batch_id)}")
-        )
+        batchstore.write(new_buckets, paths.bucket_store, batch_id)
         # sub-document granularity: gear-CDC chunk hashes of this batch's
         # kept docs (map-only, zero shuffle) land in their own batch-keyed
         # store — cross-document boilerplate sharing is a finalize-time
@@ -560,9 +356,9 @@ def process_corpus_batch(
         # stores; idempotence is the same overwrite-by-batchId contract.
         from streamds_spark.operators.cdc import cdc_chunks_gear
 
-        cdc_chunks_gear(local.select("doc_id", "text")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(paths.chunk_store, f"batch={int(batch_id)}"))
+        batchstore.write(
+            cdc_chunks_gear(local.select("doc_id", "text")), paths.chunk_store, batch_id
+        )
         # distinct-ingest sketch: this batch's content hashes as an HLL
         # register table (operators/hll.py — a <=256-row relation at ANY
         # batch size). Registers merge by max, so the finalize-time merge
@@ -574,9 +370,7 @@ def process_corpus_batch(
         # drops repeats), so the sketch is over ingested content.
         from streamds_spark.operators.hll import hll_registers
 
-        hll_registers(pre.select("_h"), "_h").write.mode("overwrite").parquet(
-            os.path.join(paths.hll_store, f"batch={int(batch_id)}")
-        )
+        batchstore.write(hll_registers(pre.select("_h"), "_h"), paths.hll_store, batch_id)
         # duplication-skew sketch: AMS F2 counters over the gated batch's
         # content hashes BEFORE dedup (`hashed` — dup structure is exactly
         # what dedup erases). Counters are LINEAR state (operators/ams.py):
@@ -591,9 +385,9 @@ def process_corpus_batch(
         # rebuild_sketch_stores' scope.
         from streamds_spark.operators.ams import ams_counters
 
-        ams_counters(hashed.select("_h"), "_h", k=AMS_K).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(paths.ams_store, f"batch={int(batch_id)}"))
+        batchstore.write(
+            ams_counters(hashed.select("_h"), "_h", k=AMS_K), paths.ams_store, batch_id
+        )
         # doc-length quantile sketch: this batch's KEPT docs as an HDR
         # register table (operators/hdr.py — <=1888 rows at ANY batch size).
         # Counts merge by SUM, so cross-trigger replay safety comes from the
@@ -605,10 +399,10 @@ def process_corpus_batch(
         # BIT-FOR-BIT (pinned by tests/test_llm_pipeline_stream.py).
         from streamds_spark.operators.hdr import hdr_registers
 
-        hdr_registers(
-            local.select(F.length("text").alias("_len")), "_len"
-        ).write.mode("overwrite").parquet(
-            os.path.join(paths.hdr_store, f"batch={int(batch_id)}")
+        batchstore.write(
+            hdr_registers(local.select(F.length("text").alias("_len")), "_len"),
+            paths.hdr_store,
+            batch_id,
         )
         # mergeable corpus sample: this batch's kept docs' bottom-k by the
         # shared md5 integer (operators/sampling.py — k rows at ANY batch
@@ -618,19 +412,23 @@ def process_corpus_batch(
         # the data) under the overwrite-by-batchId contract.
         from streamds_spark.operators.sampling import bottomk_sample
 
-        bottomk_sample(local.select("doc_id"), "doc_id", SAMPLE_K).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(paths.sample_store, f"batch={int(batch_id)}"))
+        batchstore.write(
+            bottomk_sample(local.select("doc_id"), "doc_id", SAMPLE_K),
+            paths.sample_store,
+            batch_id,
+        )
         # mergeable WEIGHTED corpus sample (Efraimidis-Spirakis): key
         # ln(u)/w with u the deterministic md5 uniform and w = n_chars makes
         # weighted sampling without replacement a plain top-k BY KEY, so
         # per-batch top-k states fold exactly like the uniform bottom-k
         # (union -> k largest keys; the r8 mergeability audit is the proof).
         # Same replay contract: membership is a pure function of the data.
-        _weighted_sample_keys(local).orderBy(
-            F.desc("k"), "doc_id"
-        ).limit(WEIGHTED_SAMPLE_K).write.mode("overwrite").parquet(
-            os.path.join(paths.wsample_store, f"batch={int(batch_id)}")
+        batchstore.write(
+            _weighted_sample_keys(local)
+            .orderBy(F.desc("k"), "doc_id")
+            .limit(WEIGHTED_SAMPLE_K),
+            paths.wsample_store,
+            batch_id,
         )
         # heavy-hitter term summary: one deterministic Misra-Gries state
         # per trigger (<= MG_STORE_CAP+1 rows at ANY batch size; the
@@ -641,10 +439,10 @@ def process_corpus_batch(
         from streamds_spark.functions.text import tokens as _tokens
         from streamds_spark.operators.heavy_hitters import mg_summary
 
-        mg_summary(
-            local.select(F.explode(_tokens(F.col("text"))).alias("term"))
-        ).write.mode("overwrite").parquet(
-            os.path.join(paths.mg_store, f"batch={int(batch_id)}")
+        batchstore.write(
+            mg_summary(local.select(F.explode(_tokens(F.col("text"))).alias("term"))),
+            paths.mg_store,
+            batch_id,
         )
     finally:
         pre.unpersist()
@@ -714,11 +512,6 @@ def run_llm_corpus_stream(
 
     paths = CorpusStreamPaths(work_dir)
     appendlog.create(spark, paths.corpus)
-    schema = spark.read.parquet(src_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.parquet(src_dir)
 
     # The gate moved INSIDE foreachBatch (round 9): the stream plan now
     # delivers the RAW batch so the data-quality monitor can report on what
@@ -737,17 +530,17 @@ def run_llm_corpus_stream(
         # per trigger, everything else hits the cache.
         df.persist()
         try:
-            dq_batch_report(df).write.mode("overwrite").parquet(
-                os.path.join(paths.dq_store, f"batch={int(bid)}")
-            )
+            batchstore.write(dq_batch_report(df), paths.dq_store, bid)
             process_corpus_batch(pipeline_gate(df), bid, paths)
         finally:
             df.unpersist()
 
-    writer = raw.writeStream.option("checkpointLocation", paths.checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.foreachBatch(_ingest_batch).start()
+    return start_batches(
+        parquet_stream(spark, src_dir, max_files_per_trigger),
+        paths.checkpoint,
+        _ingest_batch,
+        available_now=available_now,
+    )
 
 
 def chunk_sharing_report(spark: SparkSession, work_dir: str) -> DataFrame:
@@ -760,7 +553,7 @@ def chunk_sharing_report(spark: SparkSession, work_dir: str) -> DataFrame:
     row-for-row — pinned by tests/test_llm_pipeline_stream.py, including
     across store compaction."""
     paths = CorpusStreamPaths(work_dir)
-    dirs = _committed_store_dirs(paths.chunk_store, 2**62)
+    dirs = batchstore.committed(paths.chunk_store)
     if not dirs:
         # pre-chunk_store work dir or nothing committed yet: an empty report,
         # not a read error (same guard shape as _corpus_buckets)
@@ -806,7 +599,7 @@ def distinct_docs_estimate(spark: SparkSession, work_dir: str) -> DataFrame:
     from streamds_spark.operators.hll import hll_estimate
 
     paths = CorpusStreamPaths(work_dir)
-    dirs = _committed_store_dirs(paths.hll_store, 2**62)
+    dirs = batchstore.committed(paths.hll_store)
     if not dirs:
         regs = spark.createDataFrame([], "bucket int, max_rho int")
     else:
@@ -836,7 +629,7 @@ def doclen_quantiles_estimate(
 
     qs = qs or {"p50": 0.5, "p90": 0.9, "p99": 0.99}
     paths = CorpusStreamPaths(work_dir)
-    dirs = _committed_store_dirs(paths.hdr_store, 2**62)
+    dirs = batchstore.committed(paths.hdr_store)
     if not dirs:
         regs = spark.createDataFrame([], "bucket int, cnt bigint")
     else:
@@ -874,7 +667,7 @@ def corpus_sample(
     from streamds_spark.io import tombstones
 
     paths = CorpusStreamPaths(work_dir)
-    dirs = _committed_store_dirs(paths.sample_store, 2**62)
+    dirs = batchstore.committed(paths.sample_store)
     if not dirs:
         return spark.createDataFrame([], "doc_id bigint, h bigint")
     stored = spark.read.parquet(*dirs)
@@ -937,7 +730,7 @@ def corpus_weighted_sample(
             "only the true global top-k-by-key for k <= WEIGHTED_SAMPLE_K"
         )
     paths = CorpusStreamPaths(work_dir)
-    dirs = _committed_store_dirs(paths.wsample_store, 2**62)
+    dirs = batchstore.committed(paths.wsample_store)
     if not dirs:
         return spark.createDataFrame([], "doc_id bigint, k double")
     stored = spark.read.parquet(*dirs)
@@ -973,7 +766,7 @@ def corpus_heavy_hitters(
     from streamds_spark.operators.heavy_hitters import mg_fold
 
     paths = CorpusStreamPaths(work_dir)
-    dirs = _committed_store_dirs(paths.mg_store, 2**62)
+    dirs = batchstore.committed(paths.mg_store)
     if not dirs:
         return spark.createDataFrame(
             [], "term string, est bigint, n_total bigint, error_bound bigint"
@@ -998,7 +791,7 @@ def dup_skew_estimate(spark: SparkSession, work_dir: str) -> DataFrame:
     from streamds_spark.operators.ams import ams_f2_estimate, ams_merge
 
     paths = CorpusStreamPaths(work_dir)
-    dirs = _committed_store_dirs(paths.ams_store, 2**62)
+    dirs = batchstore.committed(paths.ams_store)
     if not dirs:
         return spark.createDataFrame(
             [], "n_counters bigint, sum_c_sq bigint, f2_estimate double"
@@ -1015,7 +808,7 @@ def corpus_dq_report(spark: SparkSession, work_dir: str) -> DataFrame:
     6-row relation per committed dir at any corpus size; compaction-
     invariant (the fold preserves rows). Empty store -> 0 rows."""
     paths = CorpusStreamPaths(work_dir)
-    dirs = _committed_store_dirs(paths.dq_store, 2**62)
+    dirs = batchstore.committed(paths.dq_store)
     if not dirs:
         return spark.createDataFrame(
             [],
@@ -1161,7 +954,7 @@ def delete_docs(
     # flight), so the frontier itself suffices and a fully-drained pipeline
     # can reclaim its tombstones without waiting for a batch that will
     # never come.
-    fold_after = _durable_frontier(paths) + (0 if quiesced else 1)
+    fold_after = batchstore.durable_frontier(paths.checkpoint) + (0 if quiesced else 1)
     if isinstance(doc_ids, DataFrame):
         from streamds_spark.functions.hashing import md5_int60
 
@@ -1303,18 +1096,15 @@ def rebuild_sketch_stores(spark: SparkSession, work_dir: str) -> dict:
     rebuilt = []
 
     def _swap(root: str, df) -> None:
-        seg = os.path.join(root, f"segment={hi}")
-        tmp = seg + ".rebuild"  # non-integer name: invisible to readers
+        seg = batchstore.segment_dir(root, hi)
+        tmp = seg + ".rebuild"  # not a store dir name: invisible to readers
         shutil.rmtree(tmp, ignore_errors=True)
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
         # reclaim everything the new segment subsumes, then commit via
         # rename (atomic); the brief no-segment window is why this op
         # documents the quiesce requirement
-        for d in _glob.glob(os.path.join(root, "batch=*")) + _glob.glob(
-            os.path.join(root, "segment=*")
-        ):
-            if not d.endswith(".rebuild"):
-                shutil.rmtree(d, ignore_errors=True)
+        for d in batchstore.all_dirs(root):
+            shutil.rmtree(d, ignore_errors=True)
         os.replace(tmp, seg)
         rebuilt.append(os.path.basename(root))
 

@@ -88,11 +88,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from streamds_spark.functions.hashing import md5_int60
-from streamds_spark.streaming.llm_pipeline import (
-    _append_takedown_audit,
-    _committed_store_dirs,
-    _compact_one_store,
-)
+from streamds_spark.io import batchstore
+from streamds_spark.streaming.engine import parquet_stream, start_batches
+from streamds_spark.streaming.llm_pipeline import _append_takedown_audit
 
 _KINDS = (
     "sum",
@@ -599,9 +597,7 @@ def write_view_batch(
     df: DataFrame, batch_id: int, store_dir: str, spec: ViewSpec
 ) -> None:
     """foreachBatch body: overwrite-by-batchId idempotent partial write."""
-    view_batch_state(df, spec).write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch={int(batch_id)}")
-    )
+    batchstore.write(view_batch_state(df, spec), store_dir, batch_id)
 
 
 def run_view_stream(
@@ -614,22 +610,13 @@ def run_view_stream(
 ) -> StreamingQuery:
     """Maintain the view over a parquet directory stream. work_dir holds
     the checkpoint and the partials store."""
-    schema = spark.read.parquet(src_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     store_dir = os.path.join(work_dir, "view_store")
-    writer = (
-        reader.parquet(src_dir)
-        .writeStream.option(
-            "checkpointLocation", os.path.join(work_dir, "checkpoint")
-        )
+    return start_batches(
+        parquet_stream(spark, src_dir, max_files_per_trigger),
+        os.path.join(work_dir, "checkpoint"),
+        lambda df, bid: write_view_batch(df, bid, store_dir, spec),
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.foreachBatch(
-        lambda df, bid: write_view_batch(df, bid, store_dir, spec)
-    ).start()
 
 
 def view_report(
@@ -656,9 +643,7 @@ def view_report(
     store_dir = os.path.join(work_dir, "view_store")
     if recover:
         _recover_interrupted_rebuild(store_dir)
-    dirs = _committed_store_dirs(store_dir, 2**62) + _committed_delta_dirs(
-        store_dir
-    )
+    dirs = batchstore.committed(store_dir) + _committed_delta_dirs(store_dir)
     if not dirs:
         if src_schema is not None:
             empty_src = spark.createDataFrame([], src_schema)
@@ -707,6 +692,11 @@ def _recover_interrupted_rebuild(store_dir: str) -> None:
         seg = aside.split(".old-", 1)[0]
         if os.path.exists(os.path.join(seg, "_SUCCESS")):
             shutil.rmtree(aside, ignore_errors=True)
+
+
+def _swap_asides(store_dir: str) -> "list[str]":
+    """rebuild_view's `segment=<n>.rebuild` and `segment=<n>.old-*` dirs."""
+    return _glob.glob(os.path.join(store_dir, "segment=*.*"))
 
 
 def _reclaim_subsumed_deltas(store_dir: str) -> None:
@@ -786,12 +776,7 @@ def _subsumed_delta_basenames(store_dir: str) -> "set[str]":
     applied-subsumption memory — a once-subsumed token stays excluded for
     the life of the store."""
     out = _read_json_names(os.path.join(store_dir, _APPLIED_FILE))
-    for seg in _glob.glob(os.path.join(store_dir, "segment=*")):
-        tail = os.path.basename(seg).split("=", 1)[1]
-        if not tail.isdigit() or not os.path.exists(
-            os.path.join(seg, "_SUCCESS")
-        ):
-            continue
+    for seg in batchstore.segments(store_dir):
         out |= _read_json_names(os.path.join(seg, _SUBSUMED_MANIFEST))
     return out
 
@@ -849,22 +834,6 @@ def _committed_delta_dirs(store_dir: str) -> list[str]:
     ]
 
 
-def _store_max_batch(store_dir: str) -> int:
-    """Highest batch id with ANY presence in the store — committed, torn,
-    or already folded into a segment. A rebuilt segment must dominate torn
-    dirs too: a torn batch=N is exactly the one a replay will rewrite with
-    pre-rebuild content."""
-    best = -1
-    for d in _glob.glob(os.path.join(store_dir, "batch=*")) + _glob.glob(
-        os.path.join(store_dir, "segment=*")
-    ):
-        try:
-            best = max(best, int(os.path.basename(d).split("=", 1)[1]))
-        except ValueError:
-            continue
-    return best
-
-
 def _refuse_if_ladder_exhausted(
     spark: SparkSession,
     store_dir: str,
@@ -883,7 +852,7 @@ def _refuse_if_ladder_exhausted(
     now, exactly batch min/max semantics. A same-token delta dir is
     excluded from the simulation (the re-run replaces it). Cost: one small
     aggregate over the partials store — never the corpus."""
-    dirs = _committed_store_dirs(store_dir, 2**62) + [
+    dirs = batchstore.committed(store_dir) + [
         d
         for d in _committed_delta_dirs(store_dir)
         if idempotency_token is None
@@ -1027,7 +996,7 @@ def delete_from_view(
             },
         )
         return os.path.join(store_dir, f"delta-{idempotency_token}")
-    dirs = _committed_store_dirs(store_dir, 2**62)
+    dirs = batchstore.committed(store_dir)
     if dirs:
         existing = spark.read.option("mergeSchema", "true").parquet(*dirs)
         if _ROWS not in existing.columns or not existing.where(
@@ -1140,11 +1109,11 @@ def rebuild_view(
     (the segment swap for an unchanged hi is delete-then-write)."""
     store_dir = os.path.join(work_dir, "view_store")
     _recover_interrupted_rebuild(store_dir)  # finish a crashed predecessor
-    hi = _store_max_batch(store_dir)
+    hi = batchstore.max_id(store_dir)
     if hi < 0:
         return -1
-    seg = os.path.join(store_dir, f"segment={hi}")
-    tmp = seg + ".rebuild"  # non-integer name: invisible to readers
+    seg = batchstore.segment_dir(store_dir, hi)
+    tmp = seg + ".rebuild"  # not a store dir name: invisible to readers
     shutil.rmtree(tmp, ignore_errors=True)
     # capture the deltas this rebuild subsumes BEFORE writing: the rebuilt
     # partials are recomputed from the remaining source, so every takedown
@@ -1175,8 +1144,8 @@ def rebuild_view(
         os.rename(seg, f"{seg}.old-{uuid.uuid4().hex[:8]}")
     os.replace(tmp, seg)  # <- commit point
     for d in (
-        _glob.glob(os.path.join(store_dir, "batch=*"))
-        + _glob.glob(os.path.join(store_dir, "segment=*"))
+        batchstore.all_dirs(store_dir)
+        + _swap_asides(store_dir)
         + _glob.glob(os.path.join(store_dir, "delta-*"))
     ):
         if os.path.realpath(d) != os.path.realpath(seg):
@@ -1211,7 +1180,7 @@ def compact_view(
     _recover_interrupted_rebuild(store_dir)
     _promote_applied_memory(store_dir)
     _reclaim_subsumed_deltas(store_dir)
-    return _compact_one_store(spark, store_dir, upto_batch, num_files)
+    return batchstore.compact(spark, store_dir, upto_batch, num_files=num_files)
 
 
 # ---------------------------------------------------------------------------
@@ -1467,9 +1436,9 @@ def cascade_delete_to_views(
     for name, (spec, vdir) in sorted(registered_views(work_dir).items()):
         store_dir = os.path.join(vdir, "view_store")
         if not (
-            _committed_store_dirs(store_dir, 2**62)
+            batchstore.committed(store_dir)
             or _committed_delta_dirs(store_dir)
-            or _glob.glob(os.path.join(store_dir, "segment=*"))
+            or _swap_asides(store_dir)
         ):
             out[name] = "empty"
             continue
@@ -1522,27 +1491,17 @@ def cascade_delete_to_views(
 def view_status(view_work_dir: str) -> dict:
     """Operator-facing store status for one view dir — the SINGLE
     definition behind the CLI `views` verb and the server `views` verb,
-    counting exactly what the fold reads: batch dirs and segments are
-    committed (_SUCCESS, integer-named — torn dirs and .rebuild/.old-*
-    asides are invisible to view_report and so to this census), deltas via
+    counting exactly what the fold reads: batch dirs and segments from
+    batchstore.committed (so an outranked segment, a batch dir it covers, a
+    torn dir or a .rebuild/.old-* aside is not counted), deltas via
     _committed_delta_dirs. rebuild_required is the pending-takedown count
     (0 when clean; legacy markers without the count key report 1)."""
     store = os.path.join(view_work_dir, "view_store")
-    n_seg = 0
-    for d in _glob.glob(os.path.join(store, "segment=*")):
-        tail = os.path.basename(d).split("=", 1)[1]
-        if tail.isdigit() and os.path.exists(os.path.join(d, "_SUCCESS")):
-            n_seg += 1
+    kinds = [batchstore.parse(d)[0] for d in batchstore.committed(store)]
     pending = rebuild_required(view_work_dir)
     return {
-        "n_batch_dirs": len(
-            [
-                d
-                for d in _glob.glob(os.path.join(store, "batch=*"))
-                if os.path.exists(os.path.join(d, "_SUCCESS"))
-            ]
-        ),
-        "n_segments": n_seg,
+        "n_batch_dirs": kinds.count("batch"),
+        "n_segments": kinds.count("segment"),
         "n_deltas": len(_committed_delta_dirs(store)),
         "rebuild_required": (
             int(pending.get("pending_takedowns", 1)) if pending else 0

@@ -202,8 +202,8 @@ def test_compaction_preserves_probes_and_replay_noops(spark, tmp_path):
     store contents, corpus contents and report are identical pre/post, and a
     batch replayed AFTER compaction (Structured Streaming's redelivery of an
     uncommitted trigger, landing after a maintenance window) is a no-op."""
+    from streamds_spark.io.batchstore import committed as _committed_store_dirs
     from streamds_spark.streaming.llm_pipeline import (
-        _committed_store_dirs,
         compact_stores,
         process_corpus_batch,
     )
@@ -341,7 +341,7 @@ def test_replay_probe_excludes_own_batch_state(tmp_path):
     """_committed_store_dirs must never return the probing batch's own dir —
     the replay-safety invariant (a re-run batch would otherwise anti-join
     against its own half-written hashes and drop all its docs)."""
-    from streamds_spark.streaming.llm_pipeline import _committed_store_dirs
+    from streamds_spark.io.batchstore import committed as _committed_store_dirs
 
     root = tmp_path / "store"
     for bid, committed in [(0, True), (1, True), (2, False), (3, True)]:

@@ -141,17 +141,6 @@ def test_observe_metrics(spark):
     assert got["n"] == 1000 and got["sv"] == sum(i % 7 for i in range(1000))
 
 
-def test_kafka_source_gives_clear_error_without_connector(spark):
-    """The Kafka wrapper must fail with an actionable message when the
-    connector jars are absent (as in this environment)."""
-    import pytest as _pytest
-
-    from streamds_spark.streaming.engine import stream_kafka_source
-
-    with _pytest.raises(RuntimeError, match="spark-sql-kafka"):
-        stream_kafka_source(spark, "localhost:9092", "events")
-
-
 def test_sql_registered_udfs(spark):
     """SQL-surface custom functions: tokenize + cross-engine hashes callable
     from plain SQL, consistent with the expression-side implementations."""

@@ -793,3 +793,21 @@ def test_pnn_key_named_n_not_clobbered(spark, tmp_path):
     got = {r["n"]: r["p50"] for r in view_report(spark, work_dir, spec).collect()}
     # HDR buckets are exact below the linear/log boundary: mids == values
     assert got == {"a": 20, "b": 7}
+
+
+def test_view_status_counts_what_the_fold_reads(tmp_path):
+    """A batch replayed after compaction and a segment an interrupted GC
+    left behind are both outranked by segment=3: the fold reads segment=3
+    and batch=4 only, and view_status counts exactly those."""
+    from streamds_spark.streaming.viewstore import view_status
+
+    for name in ["segment=1", "segment=3", "batch=2", "batch=4"]:
+        d = tmp_path / "view_store" / name
+        d.mkdir(parents=True)
+        (d / "_SUCCESS").touch()
+    assert view_status(str(tmp_path)) == {
+        "n_batch_dirs": 1,
+        "n_segments": 1,
+        "n_deltas": 0,
+        "rebuild_required": 0,
+    }
